@@ -1,17 +1,23 @@
 #!/usr/bin/env python3
-"""Dump `.explain("formatted")` for named queries to plans/r09/.
+"""Dump `.explain("formatted")` for named queries to a directory.
 
-Usage: python scripts/dump_plan_r09.py <suffix> <query> [query ...]
+Usage: python scripts/dump_plan.py <out_dir> <suffix> <query> [query ...]
 
-Writes plans/r09/<query>_<suffix>.txt (suffix = "before" / "after").
+Writes <out_dir>/<query>_<suffix>.txt (suffix = "before" / "after").
 Plans are built at sf0.001 — plan SHAPE (exchanges, join strategy,
 pushdown, Python-eval nodes) is scale-invariant for these queries;
 only AQE runtime re-optimization differs, and explain() shows the
 static plan either way.
+
+The plan is captured from ``df.explain("formatted")`` stdout rather
+than through private PythonSQLUtils internals, which are brittle
+across Spark versions.
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
 
@@ -22,18 +28,17 @@ from us_flight_delay_data_pipeline_spark.session import get_spark
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir, suffix, *names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r09")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="dump_plan_r09")
+    spark = get_spark(app_name="dump_plan")
     reg = load_registry()
     for name in names:
         df = reg[name].fn(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue()
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)

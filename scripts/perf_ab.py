@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
-"""Round-10 standalone measurement: run the named queries interleaved
-with BOTH frozen control profiles in one fresh-JVM session, cold runs
-(release_tracked + clearCache between every run — the r10 bench
-methodology), and print one JSON line with raw runs, medians, session
-control factors, and box-normalized seconds.
+"""Standalone A/B measurement: run the named queries interleaved with
+BOTH frozen control profiles in one fresh-JVM session, cold runs
+(release_tracked + clearCache between every run, as bench.py does),
+and print one JSON line with raw runs, medians, session control
+factors, and box-normalized seconds.
 
-Usage: SPARK_GRAFT_SF_DIR=... python scripts/perf_ab_r10.py q1 [q2 ...]
+Usage: SPARK_GRAFT_SF_DIR=... python scripts/perf_ab.py q1 [q2 ...]
 Env: SPARK_GRAFT_AB_ROUNDS (default 3) measurement rounds.
 """
 import json
@@ -26,7 +26,7 @@ import bench  # noqa: E402
 targets = sys.argv[1:]
 rounds = int(os.environ.get("SPARK_GRAFT_AB_ROUNDS", "3"))
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-spark = get_spark(app_name="perf_ab_r10")
+spark = get_spark(app_name="perf_ab")
 reg = load_registry()
 bench.materialize(reg["monthly_trend"].fn(spark, sf_dir))  # JVM warmup
 

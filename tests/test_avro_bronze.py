@@ -20,9 +20,9 @@ from us_flight_delay_data_pipeline_spark.sources.avro_ocf import (
     _encoder, _Reader, avro_schema_for, ddl_for_avro_schema,
     read_ocf_file, read_ocf_schema, write_ocf_file)
 from us_flight_delay_data_pipeline_spark.sources.envelope import (
-    avro_available,
     decode_envelope,
     encode_envelope,
+    format_available,
     read_envelope_bronze,
     write_envelope_bronze,
 )
@@ -64,7 +64,7 @@ def test_default_format_matches_probe(spark, tmp_path):
     back = read_envelope_bronze(spark, path)
     assert back.count() == 1
     import glob
-    ext = ".avro" if avro_available(spark) else ".parquet"
+    ext = ".avro" if format_available(spark, "avro") else ".parquet"
     assert glob.glob(path + "/*" + ext), (
         f"default bronze format should have produced {ext} files")
 
@@ -153,13 +153,13 @@ def test_sg_avro_scan_parallelism(spark, tmp_path):
     df = spark.range(1000).repartition(8).select(
         "id", F.concat_ws("-", F.lit("v"), F.col("id")).alias("v"))
     write_envelope_bronze(df, path, fmt="avro")
-    if not avro_available(spark):
+    if not format_available(spark, "avro"):
         files = glob.glob(path + "/*.avro")
         assert len(files) == 8
         meta = json.load(open(path + "/_SUCCESS"))
         assert sorted(meta["files"]) == sorted(
             f.split("/")[-1] for f in files)
     back = read_envelope_bronze(spark, path, fmt="avro")
-    assert back.rdd.getNumPartitions() == 8 or avro_available(spark)
+    assert back.rdd.getNumPartitions() == 8 or format_available(spark, "avro")
     got = sorted(r["id"] for r in back.collect())
     assert got == list(range(1000))

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from us_flight_delay_data_pipeline_spark.operators.ckpt import (
-    release_local_checkpoint)
+    checkpoint_rdd_ids, release_local_checkpoint)
 
 
 def _storage_blocks(spark):
@@ -28,7 +28,7 @@ def test_release_frees_checkpoint_blocks(spark):
     df = (spark.range(10_000).selectExpr("id", "id % 7 AS k")
           .localCheckpoint(eager=True))
     assert len(_storage_blocks(spark)) > before
-    release_local_checkpoint(df)
+    release_local_checkpoint(df, owned=checkpoint_rdd_ids(df))
     assert len(_storage_blocks(spark)) == before
 
 
@@ -40,13 +40,13 @@ def test_release_traverses_projections(spark):
     ckpt = (spark.range(10_000).selectExpr("id", "id % 7 AS k")
             .localCheckpoint(eager=True))
     proj = ckpt.select("id")
-    release_local_checkpoint(proj)
+    release_local_checkpoint(proj, owned=checkpoint_rdd_ids(ckpt))
     assert len(_storage_blocks(spark)) == before
 
 
 def test_release_noops_on_plain_plans(spark):
     df = spark.range(100).selectExpr("id")
-    release_local_checkpoint(df)  # must not raise
+    release_local_checkpoint(df, owned=checkpoint_rdd_ids(df))  # must not raise
     assert df.count() == 100
 
 
@@ -222,4 +222,3 @@ def test_owned_release_with_empty_ids_is_noop(spark):
     ckpt = spark.range(100).localCheckpoint(eager=True)
     release_local_checkpoint(ckpt, owned=frozenset())
     assert ckpt.count() == 100  # untouched
-    release_local_checkpoint(ckpt)  # legacy sweep still works

@@ -5,6 +5,7 @@ zero-denominator contracts."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,10 +14,13 @@ from tests.flight_fixtures import (bronze_df, dirty_bodies, encode_bodies,
                                    make_clean_rows)
 from us_flight_delay_data_pipeline_spark.plans.gold import (
     agg_carrier, agg_causes, agg_monthly, derive_kpis, gold_master)
-from us_flight_delay_data_pipeline_spark.plans.silver import silver_transform
+from us_flight_delay_data_pipeline_spark.plans import silver as silver_mod
+from us_flight_delay_data_pipeline_spark.plans.silver import (
+    silver_transform, write_silver)
 from us_flight_delay_data_pipeline_spark.plans.views import (
     dashboard_monthly_causes, dashboard_top_carriers, v_causes_pct,
     v_monthly_trend, v_overall_kpis, v_top_carriers)
+from us_flight_delay_data_pipeline_spark.sources.envelope import format_available
 
 
 @pytest.fixture(scope="module")
@@ -162,3 +166,36 @@ def test_silver_observation_metrics(spark):
     expect = silver_transform(bronze)
     years = expect.agg(F.min("year"), F.max("year")).first()
     assert (metrics["min_year"], metrics["max_year"]) == tuple(years)
+
+
+def test_write_silver_format_follows_probe(spark, silver, tmp_path):
+    """The silver sink writes Delta iff the delta datasource is
+    registered, parquet otherwise, and the table reads back equal."""
+    path = str(tmp_path / "silver")
+    write_silver(silver, path)
+    delta = format_available(spark, "delta")
+    assert os.path.isdir(os.path.join(path, "_delta_log")) == delta
+    back = spark.read.format("delta" if delta else "parquet").load(path)
+    assert back.schema == silver.schema
+    assert back.exceptAll(silver).count() == 0
+    assert silver.exceptAll(back).count() == 0
+
+
+def test_write_silver_failure_is_not_retried_in_another_format(
+        spark, tmp_path, monkeypatch):
+    """A failing silver write raises its own error: a task failure
+    surfaces with its message, and a failing Delta write is not
+    silently replaced by a parquet table."""
+    boom = spark.range(3).select(
+        F.when(F.col("id") == 2, F.raise_error(F.lit("silver boom")))
+         .otherwise(F.col("id")).alias("id"))
+    with pytest.raises(Exception, match="silver boom"):
+        write_silver(boom, str(tmp_path / "boom"))
+
+    if format_available(spark, "delta"):
+        pytest.skip("delta is registered; the failing-delta case needs it absent")
+    monkeypatch.setattr(silver_mod, "format_available", lambda *_: True)
+    path = tmp_path / "fake_delta"
+    with pytest.raises(Exception, match="delta"):
+        write_silver(spark.range(3), str(path))
+    assert not list(path.glob("*.parquet"))

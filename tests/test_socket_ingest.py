@@ -11,8 +11,6 @@ import socket
 import threading
 import time
 
-import pytest
-
 from us_flight_delay_data_pipeline_spark.plans.silver import silver_transform
 from us_flight_delay_data_pipeline_spark.streaming.ingest import (
     stream_socket_json_source,
@@ -32,7 +30,6 @@ def _serve(rows: list[dict], sock: socket.socket, done: threading.Event):
         sock.close()
 
 
-@pytest.mark.timeout(180)
 def test_socket_json_to_silver_matches_batch(spark, tmp_path):
     rows = make_clean_rows(n=60, seed=11)
     srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)

@@ -30,8 +30,7 @@ localCheckpoint-backed input (whose blocks a sweep would free
 irrecoverably — lineage is truncated, no recompute possible) is safe
 to pass. Every iterative operator here (``connected_components``,
 ``connected_components_star``, ``kmeans_fit``, ``pagerank``) records
-and passes ownership; the legacy sweep (``owned=None``) remains for
-plans the caller KNOWS are pure owned checkpoints.
+and passes ownership.
 """
 
 from __future__ import annotations
@@ -66,28 +65,24 @@ def checkpoint_rdd_ids(df: DataFrame) -> frozenset[int]:
 
 
 def release_local_checkpoint(df: DataFrame | None,
-                             owned: Collection[int] | None = None) -> None:
+                             owned: Collection[int]) -> None:
     """Free the executor-storage blocks behind a localCheckpoint'ed
     DataFrame. No-op for None or for plans that are not a checkpoint
     scan (``LogicalRDD``), so callers can pass whatever their loop
     variable holds.
 
     ``owned`` — the RDD-id set recorded by :func:`checkpoint_rdd_ids`
-    when the checkpoint was created. When given, only leaves in the
-    set are freed (the ownership contract, see module docstring);
-    when None, every ``LogicalRDD`` leaf is swept — legacy behavior,
-    safe only for plans built purely from checkpoints the caller
-    created."""
-    if df is None:
+    when the checkpoint was created. Only leaves in the set are freed
+    (the ownership contract, see module docstring)."""
+    if df is None or not owned:
+        # an empty set: ownership recording failed (Connect) — degrade to GC
         return
-    if owned is not None and not owned:
-        return  # ownership recording failed (Connect) — degrade to GC
     try:
         # The checkpoint scan may sit under projections (the loop
         # variable is often `ckpt.select(...)`) — visit every
         # LogicalRDD leaf of the plan, not just a top-level one.
         for leaf in _logical_rdd_leaves(df):
-            if owned is None or leaf.rdd().id() in owned:
+            if leaf.rdd().id() in owned:
                 leaf.rdd().unpersist(False)
     except Exception:
         # Best-effort: a Connect session (no _jdf) or an internal

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.core import decode_and_repair_body, find_column_ci, try_cast_columns
+from ..sources.envelope import format_available
 from .flight_schema import FLIGHT_PAYLOAD_SCHEMA, SILVER_CASTS
 
 __all__ = ["silver_transform", "write_silver", "write_silver_versioned"]
@@ -54,13 +55,15 @@ def silver_transform(bronze: DataFrame,
 
 
 def write_silver(df: DataFrame, path: str) -> None:
-    """Silver sink. Delta when delta-spark is on the classpath
-    (reference: ETL/…ipynb:1299-1305, overwrite + overwriteSchema),
-    parquet otherwise — same table contract either way."""
-    try:
+    """Silver sink. Delta when delta-spark is registered (reference:
+    ETL/…ipynb:1299-1305, overwrite + overwriteSchema), parquet
+    otherwise — same table contract either way. The format is chosen
+    by probing, so a failing write raises its own error instead of
+    being retried in the other format."""
+    if format_available(df.sparkSession, "delta"):
         (df.write.format("delta").mode("overwrite")
            .option("overwriteSchema", "true").save(path))
-    except Exception:
+    else:
         df.write.format("parquet").mode("overwrite").save(path)
 
 

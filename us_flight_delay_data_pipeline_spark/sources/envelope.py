@@ -27,24 +27,36 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "encode_envelope", "decode_envelope", "csv_to_envelope_batch",
-    "write_envelope_bronze", "read_envelope_bronze", "avro_available",
+    "write_envelope_bronze", "read_envelope_bronze", "format_available",
 ]
 
 ENVELOPE_COLUMNS = ("body", "partition", "offset", "enqueued_at")
 
 
-def avro_available(spark: SparkSession) -> bool:
-    """True if the spark-avro datasource is registered (it is a
-    separate artifact not bundled with pip pyspark — a bare classpath
-    probe is not enough, Spark 4 ships some sql.avro classes in core
-    without registering the source)."""
+_FORMATS: dict[tuple[str, str], bool] = {}
+
+
+def format_available(spark: SparkSession, name: str) -> bool:
+    """True if the datasource ``name`` (``"avro"``, ``"delta"``) is
+    registered. Both are separate artifacts not bundled with pip
+    pyspark, and a bare classpath probe is not enough: Spark 4 ships
+    some sql.avro classes in core without registering the source.
+    A miss scans every registered provider (0.1-0.2 s, seconds on
+    first use) and the answer is fixed for the life of the
+    application, so each name is probed once per application."""
     try:
-        jvm = spark._jvm  # noqa: SLF001 — datasource-registry probe only
-        jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
-            "avro", spark._jsparkSession.sessionState().conf())
-        return True
+        key = (spark.sparkContext.applicationId, name)
     except Exception:
-        return False
+        return False  # Spark Connect: no driver JVM to probe
+    if key not in _FORMATS:
+        try:
+            jvm = spark._jvm  # noqa: SLF001 — datasource-registry probe only
+            jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
+                name, spark._jsparkSession.sessionState().conf())
+            _FORMATS[key] = True
+        except Exception:
+            _FORMATS[key] = False
+    return _FORMATS[key]
 
 
 def encode_envelope(df: DataFrame, produced_at: bool = True) -> DataFrame:
@@ -100,8 +112,9 @@ def _ensure_py_avro(spark: SparkSession) -> None:
 def write_envelope_bronze(df: DataFrame, path: str,
                           fmt: str | None = None) -> None:
     spark = df.sparkSession
-    fmt = fmt or ("avro" if avro_available(spark) else "parquet")
-    if fmt == "avro" and not avro_available(spark):
+    native = format_available(spark, "avro")
+    fmt = fmt or ("avro" if native else "parquet")
+    if fmt == "avro" and not native:
         _ensure_py_avro(spark)
         (df.write.format("sg_avro").option("path", path)
            .mode("overwrite").save())
@@ -111,8 +124,9 @@ def write_envelope_bronze(df: DataFrame, path: str,
 
 def read_envelope_bronze(spark: SparkSession, path: str,
                          fmt: str | None = None) -> DataFrame:
-    fmt = fmt or ("avro" if avro_available(spark) else "parquet")
-    if fmt == "avro" and not avro_available(spark):
+    native = format_available(spark, "avro")
+    fmt = fmt or ("avro" if native else "parquet")
+    if fmt == "avro" and not native:
         _ensure_py_avro(spark)
         return spark.read.format("sg_avro").option("path", path).load()
     return spark.read.format(fmt).load(path)
