@@ -95,18 +95,11 @@ def main() -> None:
             t0 = time.time()
             materialize(spec.fn(spark, sf_dir))
             runs.append(time.time() - t0)
-            # Drain INSIDE the run loop (methodology fix, r10 — see
-            # OPTIMIZATION_r10.md): queries may persist() intermediates
-            # (signature tables, silver materialization), and Spark's
-            # CacheManager matches canonicalized plans, so without the
-            # per-run drain runs 2-3 reused run 1's persists and the
-            # median was a warm-cache number for persist-heavy queries
-            # (VERDICT r9 "what's wrong" #4). Draining per run makes
-            # every run cold; the drain itself is outside the timed
-            # region. This also keeps later queries cold and bounds
-            # session cache residency, as before.
+            # Drain inside the run loop (outside the timed region):
+            # Spark's CacheManager matches canonicalized plans, so
+            # without it runs 2-3 would reuse run 1's persists and the
+            # median would be a warm-cache number.
             release_tracked()
-            spark.catalog.clearCache()
         timings[name] = round(statistics.median(runs), 3)
         print(f"# {name}: {timings[name]}s (runs: {[round(r,2) for r in runs]})",
               file=sys.stderr)

@@ -18,6 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from us_flight_delay_data_pipeline_spark.operators.cache import release_tracked
 from us_flight_delay_data_pipeline_spark.queries import load_registry
 from us_flight_delay_data_pipeline_spark.session import get_spark
 
@@ -97,7 +98,7 @@ def main() -> None:
                 _, narrow = _canon(reg[name].fn(spark, sf_dir))
             finally:
                 spark.conf.set("spark.sql.shuffle.partitions", old)
-            spark.catalog.clearCache()
+            release_tracked()
             dt = time.monotonic() - t0
             rtol = getattr(reg[name], "invariance_rtol", 0.0)
             rtol_cols = getattr(reg[name], "invariance_rtol_cols", ())

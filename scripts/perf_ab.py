@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Standalone A/B measurement: run the named queries interleaved with
 BOTH frozen control profiles in one fresh-JVM session, cold runs
-(release_tracked + clearCache between every run, as bench.py does),
+(release_tracked between every run, as bench.py does),
 and print one JSON line with raw runs, medians, session control
 factors, and box-normalized seconds.
 
@@ -41,7 +41,6 @@ for rnd in range(rounds):
         bench.materialize(reg[n].fn(spark, sf_dir))
         times[n].append(round(time.time() - t0, 3))
         release_tracked()
-        spark.catalog.clearCache()
 med = {n: round(statistics.median(v), 3) for n, v in times.items()}
 ref = bench.control_reference()
 sref = bench.shuffle_control_reference()

@@ -14,6 +14,9 @@ from __future__ import annotations
 
 import io
 import json
+import os
+import subprocess
+import sys
 import zlib
 
 from us_flight_delay_data_pipeline_spark.sources.avro_ocf import (
@@ -163,3 +166,19 @@ def test_sg_avro_scan_parallelism(spark, tmp_path):
     assert back.rdd.getNumPartitions() == 8 or format_available(spark, "avro")
     got = sorted(r["id"] for r in back.collect())
     assert got == list(range(1000))
+
+
+def test_cli_runs_from_any_directory(sf_dir):
+    """Started from ``/`` with no PYTHONPATH, the Python workers that
+    run the sg_avro DataSource writer must still import the package
+    (the session puts its root on their path)."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("import sys; sys.path.insert(0, sys.argv[1]); "
+            "from us_flight_delay_data_pipeline_spark.__main__ import main; "
+            "sys.exit(main(['run', 'avro_bronze_roundtrip', '--sf-dir', "
+            "sys.argv[2], '--show', '0']))")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run([sys.executable, "-c", code, repo, sf_dir],
+                         cwd="/", env=env, capture_output=True, text=True,
+                         timeout=600)
+    assert res.returncode == 0, res.stderr[-2000:]

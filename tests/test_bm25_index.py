@@ -195,3 +195,26 @@ def test_compaction_probe_equals_multibatch(spark, sf_dir, index_path):
             os.path.join(dst, "stats")).count() == 1
     finally:
         shutil.rmtree(dst, ignore_errors=True)
+
+
+def test_failed_postings_write_commits_no_partials(spark, sf_dir, tmp_path,
+                                                   monkeypatch):
+    """A batch whose postings write fails must not commit its df/stats
+    partials: probes would otherwise score against document counts and
+    lengths for postings that do not exist. ``h32`` feeds only the
+    postings write's term bucket, so breaking it fails that write."""
+    from us_flight_delay_data_pipeline_spark.operators import bm25
+
+    path = str(tmp_path / "bm25")
+    docs = load_table(spark, sf_dir, "documents")
+    write_bm25_batch(docs.filter(F.col("doc_id") % 4 != 0), path, batch_id=0)
+    before = _probe_rows(spark, sf_dir, path)
+    with monkeypatch.context() as m:
+        m.setattr(bm25, "h32",
+                  lambda c: F.raise_error(F.lit("postings write failed")))
+        with pytest.raises(Exception, match="postings write failed"):
+            write_bm25_batch(docs.filter(F.col("doc_id") % 4 == 0), path,
+                             batch_id=1)
+    for part in ("df", "stats"):
+        assert not os.path.exists(os.path.join(path, part, "batch_id=1"))
+    assert _probe_rows(spark, sf_dir, path) == before

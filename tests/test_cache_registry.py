@@ -1,6 +1,7 @@
-"""operators/cache.py — tracked persists for shared query-builder
-intermediates: the explicit release hook for library callers outside
-the bench harness (whose per-query clearCache covers the same blocks).
+"""operators/cache.py — registered persists for shared query-builder
+intermediates, freed one at a time by ``release`` or all at once by
+``release_tracked`` (the hook a long-lived session uses between
+queries).
 """
 
 from __future__ import annotations
@@ -8,45 +9,50 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from us_flight_delay_data_pipeline_spark.operators.cache import (
-    release_tracked, track)
+    persist, release, release_tracked)
 
 
 def test_track_returns_df_and_release_unpersists(spark):
-    release_tracked()  # drain any builder-tracked state from other tests
-    df = track(spark.range(1000).select("id", (F.col("id") % 3)
-                                        .alias("k")).persist())
+    release_tracked()  # drain any builder-registered state from other tests
+    df = persist(spark.range(1000).select("id", (F.col("id") % 3)
+                                          .alias("k")))
     df.count()
     assert df.storageLevel.useMemory
     n = release_tracked()
     assert n == 1
     assert not df.storageLevel.useMemory
     assert release_tracked() == 0  # registry drained
+    # release() frees one registered persist now and deregisters it
+    df = persist(spark.range(10))
+    df.count()
+    release(df)
+    assert not df.storageLevel.useMemory
+    assert release_tracked() == 0
 
 
 def test_release_is_idempotent_after_clearcache(spark):
     release_tracked()
-    df = track(spark.range(10).persist())
+    df = persist(spark.range(10))
     df.count()
-    spark.catalog.clearCache()  # the harness contract already freed it
+    spark.catalog.clearCache()  # a caller already freed it
     assert release_tracked() == 1  # still safe: unpersist is a no-op
     assert df.count() == 10  # persist() is lazy metadata, df still fine
 
 
-def test_knn_edges_registers_with_tracker(spark):
+def test_knn_edges_registers_with_tracker(spark, sf_dir):
     """_knn_edges' persists must be releasable without clearCache."""
     from us_flight_delay_data_pipeline_spark.queries.curation_extra import (
         _knn_edges)
 
     release_tracked()
-    edges = _knn_edges(spark, "/root/testdata/sf0.001")
+    edges = _knn_edges(spark, sf_dir)
     edges.count()
     assert release_tracked() >= 2  # the bucketed table + the edge table
 
 
 def test_triangle_builders_register_with_tracker(spark):
-    """ADVICE r8: triangles_per_node persists three shared frames
-    (canonical edges, degrees, oriented edges); all must be releasable
-    via release_tracked() — not only by a global clearCache."""
+    """triangles_per_node persists three shared frames (canonical
+    edges, degrees, oriented edges); all must be registered."""
     from us_flight_delay_data_pipeline_spark.operators.graph import (
         triangles_per_node)
 

@@ -1,19 +1,23 @@
 """Checkpoint-lifecycle pins for the iterative operators.
 
-Round-3 verdict traced dedup_clusters_star's 18-62 s in-session
-spread to superseded localCheckpoint blocks accumulating across
-rounds (GC-based cleanup is nondeterministic). The operators now
-release each round's blocks the moment the next round is
-materialized — these tests pin (a) the release helper actually frees
-executor storage, and (b) a multi-round CC run leaves only its FINAL
-round's blocks behind, i.e. storage is O(1) in rounds.
+dedup_clusters_star's 18-62 s in-session spread traced to superseded
+localCheckpoint blocks accumulating across rounds (GC-based cleanup
+is nondeterministic). The operators release each round's blocks the
+moment the next round is materialized — these tests pin (a)
+``cache.release`` actually frees executor storage and only frees
+checkpoints taken by ``cache.checkpoint``, (b) a multi-round CC run
+leaves only its FINAL round's blocks behind, i.e. storage is O(1) in
+rounds, and (c) ``release_tracked`` frees that final round too.
 """
+
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from us_flight_delay_data_pipeline_spark.operators.ckpt import (
-    checkpoint_rdd_ids, release_local_checkpoint)
+from us_flight_delay_data_pipeline_spark.operators import cache
+from us_flight_delay_data_pipeline_spark.operators.cache import (
+    checkpoint, release, release_tracked)
 
 
 def _storage_blocks(spark):
@@ -22,13 +26,24 @@ def _storage_blocks(spark):
             for i in sc._jsc.sc().getRDDStorageInfo()]
 
 
+def _settled(spark, base, what, deadline=10.0):
+    # unpersist is non-blocking: block-count updates lag briefly
+    end = time.time() + deadline
+    while time.time() < end:
+        n = len(_storage_blocks(spark))
+        if n <= base:
+            return n
+        time.sleep(0.2)
+    raise AssertionError(
+        f"{what}: {len(_storage_blocks(spark)) - base} blocks leaked")
+
+
 def test_release_frees_checkpoint_blocks(spark):
     spark.catalog.clearCache()
     before = len(_storage_blocks(spark))
-    df = (spark.range(10_000).selectExpr("id", "id % 7 AS k")
-          .localCheckpoint(eager=True))
+    df = checkpoint(spark.range(10_000).selectExpr("id", "id % 7 AS k"))
     assert len(_storage_blocks(spark)) > before
-    release_local_checkpoint(df, owned=checkpoint_rdd_ids(df))
+    release(df)
     assert len(_storage_blocks(spark)) == before
 
 
@@ -37,16 +52,14 @@ def test_release_traverses_projections(spark):
     leaf under the projection must still be found and freed."""
     spark.catalog.clearCache()
     before = len(_storage_blocks(spark))
-    ckpt = (spark.range(10_000).selectExpr("id", "id % 7 AS k")
-            .localCheckpoint(eager=True))
-    proj = ckpt.select("id")
-    release_local_checkpoint(proj, owned=checkpoint_rdd_ids(ckpt))
+    ckpt = checkpoint(spark.range(10_000).selectExpr("id", "id % 7 AS k"))
+    release(ckpt.select("id"))
     assert len(_storage_blocks(spark)) == before
 
 
 def test_release_noops_on_plain_plans(spark):
     df = spark.range(100).selectExpr("id")
-    release_local_checkpoint(df, owned=checkpoint_rdd_ids(df))  # must not raise
+    release(df)  # must not raise
     assert df.count() == 100
 
 
@@ -67,6 +80,8 @@ def test_star_cc_storage_constant_in_rounds(spark):
     # final pairs checkpoint (and nothing per-round) may linger
     leftover = len(_storage_blocks(spark)) - base
     assert leftover <= 1, f"per-round checkpoint blocks leaked: {leftover}"
+    release_tracked()  # ... until the caller is done with the labels
+    _settled(spark, base, "final star round after release_tracked")
 
 
 def test_min_label_cc_storage_constant_in_rounds(spark):
@@ -81,6 +96,8 @@ def test_min_label_cc_storage_constant_in_rounds(spark):
     assert labels.filter("component <> 0").count() == 0
     leftover = len(_storage_blocks(spark)) - base
     assert leftover <= 1, f"per-round checkpoint blocks leaked: {leftover}"
+    release_tracked()
+    _settled(spark, base, "final min-label round after release_tracked")
 
 
 def test_auto_fallback_only_on_convergence_error(spark):
@@ -99,26 +116,11 @@ def test_auto_fallback_only_on_convergence_error(spark):
 
 
 def test_convergence_error_releases_final_round_blocks(spark):
-    """ADVICE r4: on the ConvergenceError path the final round's
-    localCheckpoint blocks must be released before raising —
-    clearCache() cannot free raw RDD checkpoint blocks, so without
-    the explicit release the auto-fallback's star run would sit on a
-    session-lifetime leak."""
+    """On the ConvergenceError path the final round's checkpoint
+    blocks must be released before raising — without it the
+    auto-fallback's star run would sit on top of them."""
     from us_flight_delay_data_pipeline_spark.operators.components import (
         ConvergenceError, connected_components, connected_components_star)
-
-    import time
-
-    def _settled(base, what, deadline=10.0):
-        # unpersist is non-blocking: block-count updates lag briefly
-        end = time.time() + deadline
-        while time.time() < end:
-            n = len(_storage_blocks(spark))
-            if n <= base:
-                return n
-            time.sleep(0.2)
-        raise AssertionError(
-            f"{what}: {len(_storage_blocks(spark)) - base} blocks leaked")
 
     spark.catalog.clearCache()
     base = len(_storage_blocks(spark))
@@ -126,16 +128,17 @@ def test_convergence_error_releases_final_round_blocks(spark):
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
     with pytest.raises(ConvergenceError):
         connected_components(edges, max_iter=2)
-    _settled(base, "min-label leak on raise")
+    _settled(spark, base, "min-label leak on raise")
     with pytest.raises(ConvergenceError):
         connected_components_star(edges, max_iter=1)
-    _settled(base, "star leak on raise")
+    _settled(spark, base, "star leak on raise")
 
 
 def test_pagerank_never_releases_caller_checkpoints(spark):
-    """ADVICE r4 (medium): pagerank's per-round release must only free
-    checkpoints IT created. A caller-supplied localCheckpoint-backed
-    edges/nodes input must survive the run and stay usable after."""
+    """pagerank's per-round release must only free checkpoints IT
+    created. Checkpoint-backed edges/nodes inputs — the caller's own,
+    or another operator's registered ones — must survive the run and
+    stay usable after."""
     from us_flight_delay_data_pipeline_spark.operators.graph import pagerank
 
     spark.catalog.clearCache()
@@ -150,6 +153,16 @@ def test_pagerank_never_releases_caller_checkpoints(spark):
     assert ranks.count() == 40
     # the caller's checkpoints must still be actionable (released
     # checkpoints raise on any later action — lineage is truncated)
+    assert edges.count() == 40
+    assert nodes.count() == 40
+    # inputs checkpointed through cache.checkpoint (another operator's
+    # registered output, e.g. component labels) are not pagerank's
+    edges = checkpoint(spark.range(40).select(
+        F.col("id").alias("src"), ((F.col("id") + 1) % 40).alias("dst")))
+    nodes = checkpoint(spark.range(40).select(F.col("id").alias("node")))
+    ranks = pagerank(edges, iterations=3, nodes=nodes,
+                     complete_inedges=True)
+    assert ranks.count() == 40
     assert edges.count() == 40
     assert nodes.count() == 40
 
@@ -183,23 +196,17 @@ def test_observation_names_unique_across_invocations(spark):
 
 
 def test_owned_release_spares_foreign_leaves_in_mixed_plans(spark):
-    """The r5-advice footgun made mechanical: a plan whose leaves mix
-    an operator-OWNED checkpoint with a CALLER-supplied one (e.g. a
-    loop variable built by joining round state against a
-    checkpoint-backed input). release with owned= must free only the
-    recorded ids; the caller's checkpoint must stay actionable."""
-    from us_flight_delay_data_pipeline_spark.operators.ckpt import (
-        checkpoint_rdd_ids, release_local_checkpoint)
-
+    """A plan whose leaves mix an OWNED checkpoint (taken through
+    cache.checkpoint) with a CALLER-supplied one (e.g. a loop variable
+    built by joining round state against a checkpoint-backed input):
+    release must free only the owned one; the caller's checkpoint must
+    stay actionable."""
     spark.catalog.clearCache()
     caller = (spark.range(1_000).selectExpr("id", "id % 5 AS k")
               .localCheckpoint(eager=True))
-    owned = (spark.range(1_000).selectExpr("id", "id % 3 AS j")
-             .localCheckpoint(eager=True))
-    owned_ids = checkpoint_rdd_ids(owned)
-    assert owned_ids and owned_ids.isdisjoint(checkpoint_rdd_ids(caller))
+    owned = checkpoint(spark.range(1_000).selectExpr("id", "id % 3 AS j"))
     mixed = owned.join(caller, "id")  # leaves: BOTH checkpoints
-    release_local_checkpoint(mixed, owned=owned_ids)
+    release(mixed)
     # caller's blocks untouched — still actionable
     assert caller.count() == 1_000
     # owned blocks actually freed (an unpersisted localCheckpoint
@@ -212,13 +219,17 @@ def test_owned_release_spares_foreign_leaves_in_mixed_plans(spark):
         raise AssertionError("owned checkpoint survived its release")
 
 
-def test_owned_release_with_empty_ids_is_noop(spark):
-    """checkpoint_rdd_ids returns an empty set on Connect sessions —
-    release must then degrade to a no-op (GC cleanup), NOT sweep every
-    leaf (which would hit foreign checkpoints)."""
-    from us_flight_delay_data_pipeline_spark.operators.ckpt import (
-        release_local_checkpoint)
+def test_owned_release_with_empty_ids_is_noop(spark, monkeypatch):
+    """On Connect (no ``_jdf``) checkpoint records nothing — release
+    and release_tracked must then degrade to a no-op (GC cleanup), NOT
+    sweep every leaf (which would hit foreign checkpoints)."""
+    def no_jdf(df):
+        raise AttributeError("'DataFrame' object has no attribute '_jdf'")
 
-    ckpt = spark.range(100).localCheckpoint(eager=True)
-    release_local_checkpoint(ckpt, owned=frozenset())
+    with monkeypatch.context() as m:
+        m.setattr(cache, "_checkpoint_leaves", no_jdf)
+        ckpt = checkpoint(spark.range(100))
+        release(ckpt)
+    release(ckpt)
+    release_tracked()
     assert ckpt.count() == 100  # untouched

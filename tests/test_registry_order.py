@@ -27,6 +27,11 @@ def test_sample_moves_past_the_last_checked_round():
     assert not set(list(load_registry())[:50]) & last
 
 
+def test_rows_only_queries_sort_after_every_oracle_query():
+    reg = load_registry()
+    assert all(reg[n].oracle is not None for n in list(reg)[:50])
+
+
 def test_order_rule(tmp_path):
     records = tmp_path / "records"
     records.mkdir()

@@ -12,6 +12,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from us_flight_delay_data_pipeline_spark.operators.cache import (
+    release_tracked)
 from us_flight_delay_data_pipeline_spark.plans.pretrain import pretrain_funnel
 from us_flight_delay_data_pipeline_spark.streaming.funnel import (
     prepare_benchmark_shingles, stream_pretrain_funnel)
@@ -58,17 +60,24 @@ def _run_stream(spark, sf_dir, root, drop, tag):
             spark.read.parquet(os.path.join(root, f"stats_{tag}")))
 
 
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 @pytest.fixture(scope="module")
 def streamed(spark, sf_dir, replay):
+    """(out, stats, persistent RDD count before the stream)."""
     root, drop = replay
-    return _run_stream(spark, sf_dir, root, drop, "a")
+    release_tracked()
+    before = _persistent_rdds(spark)
+    return (*_run_stream(spark, sf_dir, root, drop, "a"), before)
 
 
 def test_stream_matches_batch_funnel_survivors(spark, sf_dir, streamed):
     """The whole point: incremental state == global batch semantics,
     exactly — the prefix-filter index has no banding false negatives,
     so the survivor count must equal the batch funnel's."""
-    out, _ = streamed
+    out, _, _ = streamed
     docs = _docs(spark, sf_dir)
     funnel = pretrain_funnel(docs)
     n_sample = (funnel.filter(F.col("stage") == "sample")
@@ -79,7 +88,7 @@ def test_stream_matches_batch_funnel_survivors(spark, sf_dir, streamed):
 
 
 def test_stream_stats_funnel_shape(streamed):
-    out, stats = streamed
+    out, stats, _ = streamed
     # 4 batches x 6 stages, monotone within each batch
     per_batch = (stats.groupBy("batch_id")
                       .pivot("stage_idx", list(range(6)))
@@ -92,6 +101,16 @@ def test_stream_stats_funnel_shape(streamed):
     total_sampled = (stats.filter(F.col("stage") == "sample")
                           .agg(F.sum("n_docs")).collect()[0][0])
     assert out.count() == total_sampled
+
+
+def test_stream_releases_per_batch_intermediates(spark, streamed):
+    """A long-running stream must not accumulate each batch's persists
+    and checkpoint pins: after the 4-batch stream one release_tracked()
+    (for the lazily-held builder persists) returns the session to its
+    pre-stream count."""
+    _, _, before = streamed
+    release_tracked()
+    assert _persistent_rdds(spark) <= before
 
 
 @pytest.mark.slow  # fast-profile exclusion (see pytest.ini)

@@ -43,11 +43,13 @@ from __future__ import annotations
 
 import os
 
+from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import word_tokens
+from .cache import persist, release
 from .hashing import h32
 
 __all__ = [
@@ -146,7 +148,7 @@ def write_bm25_batch(docs: DataFrame, path: str, batch_id: int = 0,
     session for index builds (the queries build under
     applicationId-keyed paths, which enforces it)."""
     spark = docs.sparkSession
-    tfdl = _tf_dl(docs, id_col, text_col).persist()
+    tfdl = persist(_tf_dl(docs, id_col, text_col))
     bid = F.lit(int(batch_id)).cast("bigint")
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
                           "static")
@@ -192,26 +194,34 @@ def write_bm25_batch(docs: DataFrame, path: str, batch_id: int = 0,
                  .write.mode("overwrite").partitionBy("batch_id")
                  .parquet(os.path.join(path, "stats")))
 
-        # The three writes are independent once tfdl is materialized,
-        # and Spark schedules concurrent jobs FIFO with back-fill
-        # (guide §2.6) — overlapping them hides the df/stats jobs
-        # behind the postings write instead of paying three sequential
-        # job launches per ingested batch (stream_bm25_index_gated
-        # pays this per micro-batch). The persisted tfdl is computed
-        # once regardless of which job reaches it first (block-level
-        # cache locks). Results and on-disk layout are identical to
-        # the sequential writes.
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futures = [pool.submit(f) for f in
-                       (_write_postings, _write_df, _write_stats)]
-            for fut in futures:
-                fut.result()
+        # Postings first: a batch whose postings failed must not leave
+        # df/stats partials behind for probes to score against. The df
+        # and stats writes then overlap (caller thread + one inheriting
+        # thread, so job tags carry over): Spark schedules concurrent
+        # jobs FIFO with back-fill (guide §2.6), hiding one job launch
+        # per ingested batch (stream_bm25_index_gated pays this per
+        # micro-batch). The persisted tfdl is computed once regardless
+        # of which job reaches it first (block-level cache locks).
+        _write_postings()
+        failed: list[Exception] = []
+
+        def _write_df_caught() -> None:
+            try:
+                _write_df()
+            except Exception as exc:  # re-raised on the caller
+                failed.append(exc)
+
+        t = InheritableThread(target=_write_df_caught)
+        t.start()
+        try:
+            _write_stats()
+        finally:
+            t.join()
+        if failed:
+            raise failed[0]
     finally:
-        # unpersist inside the finally: a failed write must not leak
-        # the persisted tf/dl frame (ADVICE r6)
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        tfdl.unpersist()
+        release(tfdl)
 
 
 def probe_bm25_index(queries: DataFrame, path: str, k: int = 10,

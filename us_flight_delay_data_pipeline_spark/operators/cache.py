@@ -1,50 +1,119 @@
-"""Tracked persists for shared query-builder intermediates.
+"""The one owner of every persist and localCheckpoint in the package.
 
-Several query builders persist a shared intermediate that more than
-one downstream plan references (the kNN edge table, the winnowing
-candidate table, signature tables). Inside the bench/driver harness
-that residency is bounded by the caller contract — ``spark.catalog.
-clearCache()`` after every query unpersists all cached DataFrames —
-but a library user composing these builders in a long-lived session
-had no narrower hook than nuking the whole cache.
+No other module calls ``.persist()`` or ``.localCheckpoint()``; they
+call the helpers here, so "who frees this intermediate, and when" has
+one answer:
 
-``track(df)`` registers a builder-created persist; ``release_tracked``
-unpersists everything registered (idempotent, safe if the harness
-already cleared the cache). Builders keep working under the old
-clearCache-only contract; the registry just adds the precise hook.
+- ``persist(df)`` persists ``df`` and registers it;
+- ``checkpoint(df)`` takes an eager ``localCheckpoint`` and records the
+  new RDD as owned;
+- ``release(df)`` frees one now: a registered persist is unpersisted;
+  otherwise the owned checkpoint leaves of ``df`` (``df`` may be a
+  projection of the checkpoint) are freed;
+- ``release_tracked()`` frees everything still registered.
 
-Note this covers only ``persist()`` storage. ``localCheckpoint``
-blocks are NOT cache entries — clearCache never frees them — which is
-why the iterative operators release those explicitly through
-``operators/ckpt.py`` instead.
+Eager operators (iterative loops, streaming batches) ``release`` each
+intermediate as soon as it is dead, so storage stays O(1) in rounds.
+Lazy query builders cannot: the returned plan still reads their
+persists and checkpoints, so the caller runs ``release_tracked()`` once
+the result is materialized (bench.py does so after every run).
+
+Ownership means "created by ``checkpoint()``". A released checkpoint
+cannot be recomputed (its lineage was truncated), so a caller-supplied
+checkpoint in the same plan is never freed. The registry keeps
+checkpoint RDD ids, not frames, so a checkpoint that is never released
+is still freed by Spark's GC-based ContextCleaner. On Spark Connect
+(no ``_jdf``) ``checkpoint`` records nothing and releasing one is a
+no-op.
 """
 
 from __future__ import annotations
 
+import threading
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
-__all__ = ["track", "release_tracked"]
+__all__ = ["persist", "checkpoint", "release", "release_tracked"]
 
-_TRACKED: list[DataFrame] = []
+# streaming batches register from Spark's callback thread
+_LOCK = threading.Lock()
+_PERSISTED: dict[int, DataFrame] = {}
+# (applicationId, rdd id): RDD ids restart in a new SparkContext
+_OWNED: set[tuple[str, int]] = set()
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register a builder-created persisted DataFrame for later
-    release; returns it unchanged so call sites can wrap in place."""
-    _TRACKED.append(df)
+def _checkpoint_leaves(df: DataFrame):
+    """(key, rdd) for every checkpoint scan (``LogicalRDD``) leaf."""
+    app = df.sparkSession.sparkContext.applicationId
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            yield (app, leaf.rdd().id()), leaf.rdd()
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (lazily, default storage level) and register it."""
+    df = df.persist()
+    with _LOCK:
+        _PERSISTED[id(df)] = df
     return df
 
 
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eager ``localCheckpoint`` of ``df``, recorded as owned. A fresh
+    checkpoint plan has exactly one leaf, the checkpoint itself, so no
+    caller-supplied input is ever recorded."""
+    df = df.localCheckpoint(eager=True)
+    try:
+        keys = [key for key, _ in _checkpoint_leaves(df)]
+    except Exception:
+        return df  # Connect: no _jdf — left to GC-based cleanup
+    with _LOCK:
+        _OWNED.update(keys)
+    return df
+
+
+def release(df: DataFrame | None) -> None:
+    """Free ``df`` now: unpersist it if it is a registered persist,
+    else free the owned checkpoint leaves of its plan — so pass only a
+    frame the caller built on its own checkpoints. ``None`` is a
+    no-op."""
+    if df is None:
+        return
+    with _LOCK:
+        registered = _PERSISTED.pop(id(df), None) is not None
+    if registered:
+        df.unpersist(False)
+        return
+    try:
+        for key, rdd in _checkpoint_leaves(df):
+            with _LOCK:
+                owned = key in _OWNED
+                _OWNED.discard(key)
+            if owned:
+                rdd.unpersist(False)
+    except Exception:
+        pass  # Connect, or the session is gone — nothing to free
+
+
 def release_tracked() -> int:
-    """Unpersist every tracked DataFrame (non-blocking). Returns how
-    many were released. Safe to call repeatedly or after a harness
-    clearCache — unpersist on an uncached DataFrame is a no-op."""
-    n = 0
-    for df in _TRACKED:
+    """Free every registered persist and owned checkpoint; returns how
+    many. Idempotent, and safe after the session has stopped."""
+    with _LOCK:
+        frames, keys = list(_PERSISTED.values()), list(_OWNED)
+        _PERSISTED.clear()
+        _OWNED.clear()
+    for df in frames:
         try:
             df.unpersist(False)
-            n += 1
         except Exception:
             pass  # session already stopped — nothing to free
-    _TRACKED.clear()
-    return n
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        app = sc.applicationId
+        for key in keys:
+            if key[0] == app:
+                sc._jsc.sc().unpersistRDD(key[1], False)
+    return len(frames) + len(keys)

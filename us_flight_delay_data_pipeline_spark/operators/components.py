@@ -34,7 +34,7 @@ import itertools
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .ckpt import checkpoint_rdd_ids, release_local_checkpoint
+from .cache import checkpoint, persist, release
 
 # Spark's Observation listener matches completed executions by metric
 # name; a per-round-index name (cc_round_0) collides when two
@@ -90,16 +90,15 @@ def connected_components(edges: DataFrame, src: str = "src",
     :func:`connected_components_auto` falls back to it.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = (e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .distinct()
-            .persist())
+    sym = persist(e.union(e.select(F.col("b").alias("a"),
+                                   F.col("a").alias("b")))
+                   .distinct())
     # Round 1 needs no join: every node's first label is
     # min(self, neighbors), computable straight off the edge list.
-    labels = (sym.groupBy(F.col("a").alias("node"))
-                 .agg(F.min("b").alias("nmin"))
-                 .select("node", F.least("node", "nmin").alias("component"))
-                 .localCheckpoint(eager=True))
-    labels_ids = checkpoint_rdd_ids(labels)
+    labels = checkpoint(sym.groupBy(F.col("a").alias("node"))
+                           .agg(F.min("b").alias("nmin"))
+                           .select("node", F.least("node", "nmin")
+                                   .alias("component")))
     converged = False
     for i in range(max_iter):
         neighbor_min = (sym.join(labels, sym["b"] == labels["node"])
@@ -112,39 +111,33 @@ def connected_components(edges: DataFrame, src: str = "src",
         # checkpointed blocks, paid one full job-scheduling round
         # trip per iteration).
         obs = Observation(f"cc_round_{i}_{next(_OBS_ID)}")
-        new_state = (labels.join(neighbor_min, "node", "left")
-                           .select("node",
-                                   F.least("component",
-                                           F.coalesce("neighbor_min",
-                                                      "component"))
-                                    .alias("component"),
-                                   (F.col("neighbor_min")
-                                    < F.col("component")).alias("changed"))
-                           .observe(obs, F.sum(F.col("changed").cast("int"))
-                                          .alias("n_changed"))
-                           .localCheckpoint(eager=True))
-        new_ids = checkpoint_rdd_ids(new_state)
+        new_state = checkpoint(
+            labels.join(neighbor_min, "node", "left")
+                  .select("node",
+                          F.least("component",
+                                  F.coalesce("neighbor_min", "component"))
+                           .alias("component"),
+                          (F.col("neighbor_min")
+                           < F.col("component")).alias("changed"))
+                  .observe(obs, F.sum(F.col("changed").cast("int"))
+                                 .alias("n_changed")))
         # new_state is materialized (eager); round N-1's checkpoint
         # blocks are dead — free them now instead of waiting for GC
-        # (storage stays O(1) in rounds; see operators/ckpt.py)
-        release_local_checkpoint(labels, owned=labels_ids)
+        release(labels)
         labels = new_state.select("node", "component")
-        labels_ids = new_ids
         if not obs.get["n_changed"]:
             converged = True
             break
-    sym.unpersist()
+    release(sym)
     if not converged:
         # Returning here would emit labels that are NOT component
         # minima (a path longer than max_iter rounds is still mid-
         # propagation) — silently-wrong clusters. Fail loudly; the
         # caller either raises max_iter or switches to the O(log^2 n)
         # star formulation, whose rounds scale with log(diameter).
-        # Free the final round's checkpoint blocks first —
-        # clearCache() does not touch raw RDD checkpoint blocks, so
-        # without this the auto-fallback's star run would sit on top
-        # of a session-lifetime storage leak.
-        release_local_checkpoint(labels, owned=labels_ids)
+        # Free the final round first: the auto-fallback's star run
+        # would otherwise sit on top of it.
+        release(labels)
         raise ConvergenceError(
             f"connected_components did not converge in {max_iter} "
             f"rounds (graph diameter exceeds max_iter); use "
@@ -184,15 +177,14 @@ def connected_components_star(edges: DataFrame, src: str = "src",
     # node set BEFORE dropping self-loops: a node whose only edge is
     # (n, n) is still its own singleton component — matching
     # connected_components' contract over its symmetrized edge set
-    all_nodes = (e0.select(F.col("a").alias("node"))
-                   .union(e0.select(F.col("b").alias("node")))
-                   .distinct().persist())
+    all_nodes = persist(e0.select(F.col("a").alias("node"))
+                          .union(e0.select(F.col("b").alias("node")))
+                          .distinct())
     e = e0.filter(F.col("a") != F.col("b"))
     # canonical undirected pair set (x < y)
-    pairs = (e.select(F.least("a", "b").alias("x"),
-                      F.greatest("a", "b").alias("y"))
-              .distinct().localCheckpoint(eager=True))
-    pairs_ids = checkpoint_rdd_ids(pairs)
+    pairs = checkpoint(e.select(F.least("a", "b").alias("x"),
+                                F.greatest("a", "b").alias("y"))
+                        .distinct())
 
     converged = False
     prev_count = pairs.count()
@@ -217,15 +209,15 @@ def connected_components_star(edges: DataFrame, src: str = "src",
         down = ls.select(F.col("y").alias("u"), F.col("x").alias("v"))
         smins = down.groupBy("u").agg(F.min("v").alias("m"))
         obs = Observation(f"star_round_{i}_{next(_OBS_ID)}")
-        ss = (down.join(smins, "u")
-                  .select(F.col("v").alias("n"), "m")
-                  .union(smins.select(F.col("u").alias("n"), "m"))
-                  .filter(F.col("n") != F.col("m"))
-                  .select(F.least("n", "m").alias("x"),
-                          F.greatest("n", "m").alias("y"))
-                  .distinct()
-                  .observe(obs, F.count(F.lit(1)).alias("cnt"))
-                  .localCheckpoint(eager=True))
+        ss = checkpoint(down.join(smins, "u")
+                            .select(F.col("v").alias("n"), "m")
+                            .union(smins.select(F.col("u").alias("n"),
+                                                "m"))
+                            .filter(F.col("n") != F.col("m"))
+                            .select(F.least("n", "m").alias("x"),
+                                    F.greatest("n", "m").alias("y"))
+                            .distinct()
+                            .observe(obs, F.count(F.lit(1)).alias("cnt")))
         # Fixpoint test: both sides are DISTINCT canonical (x<y) sets,
         # so |ss| == |pairs| plus ss\pairs == ∅ implies equality. The
         # count rides the checkpoint materialization via observe()
@@ -233,21 +225,18 @@ def connected_components_star(edges: DataFrame, src: str = "src",
         # proves "changed" — the anti-join (the expensive half) runs
         # only on the one round where counts first agree, not 2× per
         # round.
-        ss_ids = checkpoint_rdd_ids(ss)
         ss_count = obs.get["cnt"]
-        if ss_count == prev_count and \
-                ss.join(pairs, ["x", "y"], "left_anti").count() == 0:
-            release_local_checkpoint(pairs, owned=pairs_ids)
-            pairs, pairs_ids = ss, ss_ids
-            converged = True
-            break
+        converged = ss_count == prev_count and \
+            ss.join(pairs, ["x", "y"], "left_anti").count() == 0
         prev_count = ss_count
         # round N-1's edge-set checkpoint is dead (ss is materialized
         # and the fixpoint test above already ran) — free its blocks
         # so storage stays O(1) in rounds (the 18-62s in-session
         # spread of dedup_clusters_star traced to this accumulation)
-        release_local_checkpoint(pairs, owned=pairs_ids)
-        pairs, pairs_ids = ss, ss_ids
+        release(pairs)
+        pairs = ss
+        if converged:
+            break
     if not converged:
         # The label-extraction step below assumes a star forest; a
         # non-fixpoint edge set can put one node on the y side of two
@@ -255,9 +244,8 @@ def connected_components_star(edges: DataFrame, src: str = "src",
         # O(log^2 n) rounds bounds any graph, so hitting this means
         # max_iter was set far too low — raise rather than return
         # possibly-inconsistent labels.
-        all_nodes.unpersist()
-        # last round's blocks; see above
-        release_local_checkpoint(pairs, owned=pairs_ids)
+        release(all_nodes)
+        release(pairs)
         raise ConvergenceError(
             f"connected_components_star did not reach an edge-set "
             f"fixpoint in {max_iter} rounds; raise max_iter "
@@ -270,5 +258,5 @@ def connected_components_star(edges: DataFrame, src: str = "src",
     centers = (all_nodes.join(labels, "node", "left_anti")
                         .select("node", F.col("node").alias("component")))
     out = labels.union(centers)
-    all_nodes.unpersist()
+    release(all_nodes)
     return out

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.core import rebalance
 from ..functions.text import word_ngrams, word_tokens
+from .cache import persist, release
 from .hashing import band_key, h32, minhash_signature, rolling_fingerprint, simhash32
 
 __all__ = [
@@ -83,12 +84,12 @@ def minhash_signatures(df: DataFrame, coeffs: list[tuple[int, int]],
     signature) — persisted, ready for band joins."""
     toks = word_tokens(F.lower(F.col(text_col)))
     sh = word_ngrams(F.col(text_col), ngram)
-    return (_spread(df.filter(F.size(toks) >= ngram))
-              .select(F.col(id_col),
-                      *[F.col(c) for c in keep_cols],
-                      _shingle_hashes(F.col(text_col), ngram).alias("hsd"),
-                      minhash_signature(sh, coeffs).alias("sig"))
-              .persist())
+    return persist(
+        _spread(df.filter(F.size(toks) >= ngram))
+          .select(F.col(id_col),
+                  *[F.col(c) for c in keep_cols],
+                  _shingle_hashes(F.col(text_col), ngram).alias("hsd"),
+                  minhash_signature(sh, coeffs).alias("sig")))
 
 
 def _verified_jaccard_pairs(cands: DataFrame, threshold: float) -> DataFrame:
@@ -172,8 +173,7 @@ def minhash_lsh_duplicate_pairs_hub_capped(
     carry text-derived arrays (the uncapped variant tolerates it at
     driver SFs; this is the deploy path).
     """
-    from .cache import track
-    sig = track(minhash_signatures(df, coeffs, text_col, id_col))
+    sig = minhash_signatures(df, coeffs, text_col, id_col)
     banded = sig.select(
         F.col(id_col),
         F.explode(F.array(*[
@@ -185,7 +185,7 @@ def minhash_lsh_duplicate_pairs_hub_capped(
                       F.min(id_col).alias("rep")))
     # join back on bk: both sides hash-partitioned on bk by the agg —
     # co-located, no extra exchange on the banded side
-    bd = track(banded.join(deg, "bk").persist())
+    bd = persist(banded.join(deg, "bk"))
     small = bd.filter(F.col("n") <= hub_cap)
     a, b = small.alias("a"), small.alias("b")
     small_pairs = (a.join(b, (F.col("a.bk") == F.col("b.bk"))
@@ -225,9 +225,9 @@ def simhash_duplicate_pairs(df: DataFrame, text_col: str = "text",
     Pigeonhole: with 4 bands any pair within distance 3 shares a band,
     so recall is exact for max_hamming <= 3."""
     toks = word_tokens(F.lower(F.col(text_col)))
-    base = (_spread(df.filter(F.size(toks) > 0))
-              .select(F.col(id_col), simhash32(toks).alias("simhash"))
-              .persist())
+    base = persist(
+        _spread(df.filter(F.size(toks) > 0))
+          .select(F.col(id_col), simhash32(toks).alias("simhash")))
     # one shuffle for all 4 bands: explode to (band_idx, band_byte)
     # keys and equi-join once (vs 4 self-joins + union)
     banded = base.select(
@@ -277,12 +277,12 @@ def ngram_jaccard_pairs(df: DataFrame, block_col: str,
     # (Catalyst pushes deterministic filters below the repartition),
     # serializing a full regex pass that the post-rebalance projection
     # then repeats 32-wide.
-    sh = (_spread(df)
-            .select(F.col(id_col), F.col(block_col),
-                    F.sort_array(_shingle_hashes(F.col(text_col), ngram))
-                     .alias("hsd"))
-            .withColumn("n", F.size("hsd"))
-            .persist())
+    sh = persist(
+        _spread(df)
+          .select(F.col(id_col), F.col(block_col),
+                  F.sort_array(_shingle_hashes(F.col(text_col), ngram))
+                   .alias("hsd"))
+          .withColumn("n", F.size("hsd")))
     prefix_len = _prefix_len(F.col("n"), threshold)
     pref = sh.select(id_col, block_col, "n", "hsd",
                      F.explode(F.slice("hsd", F.lit(1), prefix_len))
@@ -344,7 +344,7 @@ def build_minhash_index(df: DataFrame, path: str,
     # count that actually holds that band, not by the build width.
     banded.repartition("band", "key") \
           .write.mode("overwrite").partitionBy("band").parquet(path)
-    sig.unpersist()
+    release(sig)
 
 
 def write_minhash_batch(docs: DataFrame, path: str, batch_id: int,
@@ -384,7 +384,7 @@ def write_minhash_batch(docs: DataFrame, path: str, batch_id: int,
               .parquet(path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        sig.unpersist()
+        release(sig)
 
 
 def lsh_pairs_from_index(spark, path: str,
@@ -451,7 +451,7 @@ def dedup_against_index(new_docs: DataFrame, index_path: str,
            / (F.size("h_new") + F.size("h_corpus") - common).cast("double"))
     out = (cands.select("new_id", "corpus_id", jac.alias("jaccard"))
                 .filter(F.col("jaccard") >= threshold))
-    sig.unpersist()
+    release(sig)
     return out
 
 
@@ -489,13 +489,13 @@ def build_jaccard_index(df: DataFrame, path: str, block_col: str,
     # filtering n > 0 ABOVE the persist — the cache boundary stops
     # predicate pushdown, so the cheap filter runs on the cached rows,
     # not as a second serial tokenize pass in the scan stage.
-    sh = (_spread(df)
-            .select(F.col(id_col).alias("doc_id"),
-                    F.col(block_col).alias("block"),
-                    F.sort_array(_shingle_hashes(F.col(text_col), ngram))
-                     .alias("hsd"))
-            .withColumn("n", F.size("hsd"))
-            .persist())
+    sh = persist(
+        _spread(df)
+          .select(F.col(id_col).alias("doc_id"),
+                  F.col(block_col).alias("block"),
+                  F.sort_array(_shingle_hashes(F.col(text_col), ngram))
+                   .alias("hsd"))
+          .withColumn("n", F.size("hsd")))
     sketch = sh.filter(F.col("n") > 0).select("doc_id", "block", "n", "hsd")
     prefix_len = _prefix_len(F.col("n"), threshold)
     inverted = sh.select(
@@ -512,7 +512,7 @@ def build_jaccard_index(df: DataFrame, path: str, block_col: str,
     else:
         sketch.write.mode(mode).parquet(os.path.join(path, "sketch"))
         inverted.write.mode(mode).parquet(os.path.join(path, "inverted"))
-    sh.unpersist()
+    release(sh)
 
 
 def dedup_against_jaccard_index(new_docs: DataFrame, path: str,
@@ -545,13 +545,13 @@ def dedup_against_jaccard_index(new_docs: DataFrame, path: str,
     # no tokenizing pre-filter: empty-hsd docs emit no prefix shingles
     # (never become candidates) and the broadcast side joins inner on
     # new_id, so the extra rows are inert — see ngram_jaccard_pairs
-    sh = (_spread(new_docs)
-            .select(F.col(id_col).alias("new_id"),
-                    F.col(block_col).alias("block"),
-                    F.sort_array(_shingle_hashes(F.col(text_col), ngram))
-                     .alias("h_new"))
-            .withColumn("n", F.size("h_new"))
-            .persist())
+    sh = persist(
+        _spread(new_docs)
+          .select(F.col(id_col).alias("new_id"),
+                  F.col(block_col).alias("block"),
+                  F.sort_array(_shingle_hashes(F.col(text_col), ngram))
+                   .alias("h_new"))
+          .withColumn("n", F.size("h_new")))
     prefix_len = _prefix_len(F.col("n"), threshold)
     pref = sh.select("new_id", "block", "h_new",
                      F.explode(F.slice("h_new", F.lit(1), prefix_len))
@@ -570,5 +570,5 @@ def dedup_against_jaccard_index(new_docs: DataFrame, path: str,
            / (F.size("h_new") + F.size("h_corpus") - common).cast("double"))
     out = (cands.select("new_id", "corpus_id", jac.alias("jaccard"))
                 .filter(F.col("jaccard") >= threshold))
-    sh.unpersist()
+    release(sh)
     return out

@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cache import track
-from .ckpt import checkpoint_rdd_ids, release_local_checkpoint
+from .cache import checkpoint, persist, release
 
 __all__ = ["pagerank", "triangle_count", "triangles_per_node",
            "label_propagation", "kcore_peel", "PR_QUANT"]
@@ -63,12 +62,12 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if distinct_edges:  # pass False when the input is distinct by
         e = e.distinct()  # construction — saves a full edge shuffle
-    e = e.persist()
+    e = persist(e)
     if nodes is None:
         nodes = (e.select(F.col("src").alias("node"))
                   .union(e.select(F.col("dst").alias("node")))
                   .distinct())
-    nodes = nodes.persist()
+    nodes = persist(nodes)
     n_total = nodes.count()
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     # (src, dst, deg) — reused every iteration; the degree table is
@@ -79,7 +78,7 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     # an explicit adj.count() here was one whole extra pass (r10 audit:
     # actions per pagerank call = 1 setup count + iterations, nothing
     # per-round beyond the checkpoint itself)
-    adj = e.join(F.broadcast(deg) if small else deg, "src").persist()
+    adj = persist(e.join(F.broadcast(deg) if small else deg, "src"))
 
     teleport = (1.0 - damping) / n_total
     # the rank vector is |nodes|-sized — when it fits a broadcast,
@@ -87,16 +86,7 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     # the per-iteration edge shuffle entirely; past that size the
     # join falls back to hash-partitioning both sides on src
     ranks = nodes.select("node", F.lit(1.0 / n_total).alias("rank"))
-    # Ownership rule for checkpoint release: only free checkpoints
-    # THIS loop created, enforced mechanically by recording each new
-    # checkpoint's RDD ids (operators/ckpt.py). The iteration-0
-    # `ranks` is the un-checkpointed nodes projection — sweeping its
-    # LogicalRDD leaves would free a caller-supplied localCheckpoint-
-    # backed `edges`/`nodes` irrecoverably (lineage is truncated; no
-    # recompute possible).
-    prev_ckpt: DataFrame | None = None
-    prev_ids: frozenset[int] = frozenset()
-    for _ in range(iterations):
+    for i in range(iterations):
         units = F.floor((F.col("rank") / F.col("deg")) * F.lit(PR_QUANT)) \
                  .cast("decimal(38,0)")
         rside = F.broadcast(ranks) if small else ranks
@@ -115,30 +105,27 @@ def pagerank(edges: DataFrame, iterations: int = 3,
                               .select("node",
                                       F.coalesce("rank", F.lit(teleport))
                                        .alias("rank")))
-        new_ranks = new_ranks.localCheckpoint()  # truncate per-iter lineage
-        new_ids = checkpoint_rdd_ids(new_ranks)
-        # superseded OWNED round only (id-tracked, ckpt.py)
-        release_local_checkpoint(prev_ckpt, owned=prev_ids)
-        prev_ckpt, prev_ids = new_ranks, new_ids
+        new_ranks = checkpoint(new_ranks)  # truncate per-iter lineage
+        if i:  # superseded round — never the caller's `nodes` plan
+            release(ranks)
         ranks = new_ranks
-    e.unpersist(); nodes.unpersist(); adj.unpersist()
+    release(e)
+    release(nodes)
+    release(adj)
     return ranks
 
 
 def _canonical_edges_and_degrees(edges: DataFrame, a: str,
                                  b: str) -> tuple[DataFrame, DataFrame]:
     """Canonical (x < y) distinct undirected edge list + per-node
-    degrees, both persisted (each feeds two downstream subtrees).
-    Persists are cache.track()ed so library callers can free them via
-    release_tracked() without a global clearCache."""
-    e = track(edges.select(F.least(F.col(a), F.col(b)).alias("x"),
-                           F.greatest(F.col(a), F.col(b)).alias("y"))
-                   .filter(F.col("x") != F.col("y"))
-                   .distinct().persist())
-    deg = track(e.select(F.col("x").alias("node"))
-                 .unionAll(e.select(F.col("y").alias("node")))
-                 .groupBy("node").agg(F.count("*").alias("d"))
-                 .persist())
+    degrees, both persisted (each feeds two downstream subtrees)."""
+    e = persist(edges.select(F.least(F.col(a), F.col(b)).alias("x"),
+                             F.greatest(F.col(a), F.col(b)).alias("y"))
+                     .filter(F.col("x") != F.col("y"))
+                     .distinct())
+    deg = persist(e.select(F.col("x").alias("node"))
+                   .unionAll(e.select(F.col("y").alias("node")))
+                   .groupBy("node").agg(F.count("*").alias("d")))
     return e, deg
 
 
@@ -174,7 +161,7 @@ def triangles_per_node(edges: DataFrame, a: str = "a",
     community features need; cost profile matches the global count
     plus one |triangles|-row aggregate."""
     e, deg = _canonical_edges_and_degrees(edges, a, b)
-    oe = track(_orient_edges(e, deg).persist())
+    oe = persist(_orient_edges(e, deg))
     w1 = oe.select("src", F.col("dst").alias("v"),
                    F.col("dstk").alias("vk"))
     w2 = oe.select(F.col("src").alias("src2"), F.col("dst").alias("w"),
@@ -216,7 +203,7 @@ def triangle_count(edges: DataFrame, a: str = "a",
     double division (clustering) is deterministic.
     """
     e, deg = _canonical_edges_and_degrees(edges, a, b)
-    oe = track(_orient_edges(e, deg).persist())
+    oe = persist(_orient_edges(e, deg))
     w1 = oe.select("src", F.col("dst").alias("v"),
                    F.col("dstk").alias("vk"))
     w2 = oe.select(F.col("src").alias("src2"), F.col("dst").alias("w"),
@@ -245,7 +232,7 @@ def triangle_count(edges: DataFrame, a: str = "a",
 def _bidirectional(edges: DataFrame, a: str, b: str) -> DataFrame:
     """Canonical distinct undirected edges as BOTH directions
     (src, dst) — the adjacency every per-node neighborhood aggregate
-    consumes. Persisted + tracked (re-read every round).
+    consumes. Persisted (re-read every round).
 
     repartition("dst") before the persist: every consumer joins the
     label/survivor vector on dst each round, and a cached
@@ -259,11 +246,11 @@ def _bidirectional(edges: DataFrame, a: str, b: str) -> DataFrame:
     satisfied nothing), so this is neutral there and removes its
     dst-side exchange."""
     e, _deg = _canonical_edges_and_degrees(edges, a, b)
-    return track(e.select(F.col("x").alias("src"), F.col("y").alias("dst"))
-                  .unionAll(e.select(F.col("y").alias("src"),
-                                     F.col("x").alias("dst")))
-                  .repartition("dst")
-                  .persist())
+    return persist(e.select(F.col("x").alias("src"),
+                            F.col("y").alias("dst"))
+                    .unionAll(e.select(F.col("y").alias("src"),
+                                       F.col("x").alias("dst")))
+                    .repartition("dst"))
 
 
 def label_propagation(edges: DataFrame, rounds: int = 3,
@@ -342,8 +329,7 @@ def kcore_peel(edges: DataFrame, k: int = 3,
     bi = _bidirectional(edges, a, b)
     deg = bi.groupBy("src").agg(F.count("*").alias("d"))
     for _ in range(rounds):
-        keep = track(deg.filter(F.col("d") >= k).select("src")
-                        .persist())
+        keep = persist(deg.filter(F.col("d") >= k).select("src"))
         keep.count()  # materialize: keep_r has two consumers below
         live = (bi.join(keep, "src", "leftsemi")
                   .join(keep.select(F.col("src").alias("dst")),

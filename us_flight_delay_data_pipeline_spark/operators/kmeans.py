@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .ckpt import checkpoint_rdd_ids, release_local_checkpoint
+from .cache import checkpoint, release
 
 __all__ = ["kmeans_fit", "assign_clusters", "inertia"]
 
@@ -65,8 +65,7 @@ def kmeans_fit(corpus: DataFrame, init_centroids: DataFrame,
     Deterministic: fixed init, argmin tie-breaks on c_id, means from
     posexplode + avg (empty clusters keep their previous centroid).
     """
-    cent = init_centroids.select("c_id", "cv").localCheckpoint(eager=True)
-    cent_ids = checkpoint_rdd_ids(cent)
+    cent = checkpoint(init_centroids.select("c_id", "cv"))
     history: list[float] = []
     for _ in range(max_iter):
         assigned = assign_clusters(corpus, cent, vec_col, id_col)
@@ -79,13 +78,11 @@ def kmeans_fit(corpus: DataFrame, init_centroids: DataFrame,
                  .agg(F.transform(
                      F.array_sort(F.collect_list(F.struct("dim", "m"))),
                      lambda s: s["m"]).alias("cv_new")))
-        new_cent = (cent.join(means, "c_id", "left")
-                    .select("c_id", F.coalesce("cv_new", "cv").alias("cv"))
-                    .localCheckpoint(eager=True))
-        new_ids = checkpoint_rdd_ids(new_cent)
-        # superseded round, O(1) storage; owned ids only (ckpt.py)
-        release_local_checkpoint(cent, owned=cent_ids)
-        cent, cent_ids = new_cent, new_ids
+        new_cent = checkpoint(
+            cent.join(means, "c_id", "left")
+                .select("c_id", F.coalesce("cv_new", "cv").alias("cv")))
+        release(cent)  # superseded round: O(1) storage in rounds
+        cent = new_cent
         if len(history) >= 2 and history[-2] - history[-1] <= tol * abs(history[-2]):
             break
     return cent, history

@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .cache import persist
+
 __all__ = ["with_global_running"]
 
 
@@ -65,16 +67,6 @@ def with_global_running(
     ``_n_total`` (row count) and, if ``sum_col`` is set,
     ``_sum_total`` — broadcast from the same one-row offsets subtree,
     so the input is still scanned once.
-
-    Caller contract (cache lifecycle): this operator ``persist()``s
-    the range-partitioned frame for correctness (see the inline note
-    on rdd.id-seeded range sampling) and does NOT unpersist it — the
-    cached plan must outlive the returned (lazy) DataFrame, and the
-    operator cannot know when the caller is done. Library users must
-    bound cache residency themselves: ``spark.catalog.clearCache()``
-    between logical jobs (what bench.py does per query), or hold the
-    result, materialize, and unpersist via ``spark.catalog``. Spark's
-    LRU storage eviction bounds worst-case residency regardless.
     """
     # persist: the ranged frame is consumed by TWO subtrees (the local
     # window and the per-partition totals), and callers that reference
@@ -90,13 +82,10 @@ def with_global_running(
     # testdata scans never exposed it). persist() registers ONE cached
     # plan, so every execution reuses the same materialized RDD — one
     # partitioner, one partitioning, for the offsets pass and every
-    # downstream reference alike. Cache policy: harness-scoped like the
-    # signature tables (Spark's storage eviction bounds residency);
-    # rows carried are the caller's projection, which callers keep
-    # narrow.
-    ranged = (df.repartitionByRange(*order_by)
-                .withColumn("_pid", F.spark_partition_id())
-                .persist())
+    # downstream reference alike. Rows carried are the caller's
+    # projection, which callers keep narrow.
+    ranged = persist(df.repartitionByRange(*order_by)
+                       .withColumn("_pid", F.spark_partition_id()))
     wloc = Window.partitionBy("_pid").orderBy(*order_by)
     out = ranged
     if rank is not None:

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import quality_score, word_ngrams, word_tokens
+from ..operators.cache import persist
 from ..operators.components import connected_components
 from ..operators.dedup import ngram_jaccard_pairs
 from ..operators.hashing import h32
@@ -100,16 +101,15 @@ def pretrain_funnel(docs: DataFrame) -> DataFrame:
     # the (quality-surviving) minimum doc_id is the keeper
     w = Window.partitionBy("th")
     qmin = F.min(F.when(F.col("s_quality"), F.col("doc_id"))).over(w)
-    flags = (narrow
-             .withColumn("s_exact",
-                         F.col("s_quality") & (F.col("doc_id") == qmin))
-             .drop("th")
-             .persist())
+    flags = persist(narrow
+                    .withColumn("s_exact", F.col("s_quality")
+                                & (F.col("doc_id") == qmin))
+                    .drop("th"))
 
     # --- exact survivors WITH text: the only full-text materialization
     # (consumed by fuzzy-pair generation and decontamination shingles)
-    exact_docs = base.join(flags.filter("s_exact").select("doc_id"),
-                           "doc_id", "left_semi").persist()
+    exact_docs = persist(base.join(flags.filter("s_exact").select("doc_id"),
+                                   "doc_id", "left_semi"))
 
     pairs = ngram_jaccard_pairs(exact_docs, block_col="lang",
                                 threshold=0.3).select("doc_a", "doc_b")

@@ -161,6 +161,8 @@ def load_registry() -> dict[str, QuerySpec]:
     The driver's oracle sample is the first 50 registered names, so
     the order is the rotation: red rows are re-queued, new queries get
     their first check, then the stalest green evidence is re-checked.
+    Rows-only queries (no oracle) come after all the others: a
+    sample slot spent on them buys only the weaker row-count check.
     """
     from . import curation_extra  # noqa: F401
     from . import curation_wave6  # noqa: F401
@@ -188,7 +190,9 @@ def load_registry() -> dict[str, QuerySpec]:
         spec = REGISTRY[name]
         if not spec.audit:
             REGISTRY[name] = dataclasses.replace(spec, audit=True)
-    reordered = {n: REGISTRY[n] for n in driver_sample_order(REGISTRY)}
+    order = sorted(driver_sample_order(REGISTRY),
+                   key=lambda n: REGISTRY[n].oracle is None)
+    reordered = {n: REGISTRY[n] for n in order}
     REGISTRY.clear()
     REGISTRY.update(reordered)
     return REGISTRY

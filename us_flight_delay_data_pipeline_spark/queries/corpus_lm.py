@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.cache import persist
 from ..sources.registry import load_table
 from . import register
 from .llm_ext import _BAND_JOIN_SQL, _sig_cte_sql, _tok_sql, MINHASH_COEFFS, _BANDS
@@ -93,9 +94,8 @@ def bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select("doc_id", "b.w1", "b.w2"))
     # one scan of the token stream; c12/c1 re-aggregate the persisted
     # per-doc counts instead of re-exploding the corpus
-    doc_bg = (bg.groupBy("doc_id", "w1", "w2")
-                .agg(F.count("*").alias("k"))
-                .persist())
+    doc_bg = persist(bg.groupBy("doc_id", "w1", "w2")
+                       .agg(F.count("*").alias("k")))
     c12 = doc_bg.groupBy("w1", "w2").agg(F.sum("k").alias("c12"))
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
     stats = (c12.join(c1, "w1")
@@ -650,9 +650,9 @@ def minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import band_key, ngram_jaccard_pairs
     from .llm_ext import _signature_table
     d = load_table(spark, sf_dir, "documents")
-    sig = _signature_table(spark, sf_dir).persist()
-    truth = (ngram_jaccard_pairs(d, block_col="lang", threshold=0.3)
-             .select("doc_a", "doc_b").persist())
+    sig = persist(_signature_table(spark, sf_dir))
+    truth = persist(ngram_jaccard_pairs(d, block_col="lang", threshold=0.3)
+                    .select("doc_a", "doc_b"))
     n_true = truth.agg(F.count("*").cast("bigint").alias("n_true"))
     # ALL four configs ride ONE exploded self-join: each doc emits
     # sum-of-bands rows keyed (config, band, key), so candidate
@@ -668,13 +668,12 @@ def minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             for b, r in _BAND_CONFIGS
             for i in range(b)])).alias("bk"))
     x, y = banded.alias("a"), banded.alias("b")
-    cands = (x.join(y, (F.col("a.bk") == F.col("b.bk"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")))
-              .select(F.col("a.bk.cfg").alias("cfg"),
-                      F.col("a.doc_id").alias("doc_a"),
-                      F.col("b.doc_id").alias("doc_b"))
-              .dropDuplicates(["cfg", "doc_a", "doc_b"])
-              .persist())
+    cands = persist(x.join(y, (F.col("a.bk") == F.col("b.bk"))
+                           & (F.col("a.doc_id") < F.col("b.doc_id")))
+                     .select(F.col("a.bk.cfg").alias("cfg"),
+                             F.col("a.doc_id").alias("doc_a"),
+                             F.col("b.doc_id").alias("doc_b"))
+                     .dropDuplicates(["cfg", "doc_a", "doc_b"]))
     n_cand = cands.groupBy("cfg").agg(
         F.count("*").cast("bigint").alias("n_candidates"))
     n_caught = (cands.join(truth, ["doc_a", "doc_b"], "left_semi")
@@ -686,9 +685,6 @@ def minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfgs = (sig.sparkSession.range(1)
                .select(F.explode(cfg_rows).alias("c"))
                .select("c.cfg", "c.rows_per_band"))
-    # lazy return; sig/truth/cands persists are harness-scoped (see
-    # semantic_dedup's note) — the signature table and truth pairs
-    # are vocabulary/pair-sized, and bench.py clearCache()s per query
     return (cfgs.join(n_cand, "cfg", "left")
                 .join(n_caught, "cfg", "left")
                 .crossJoin(F.broadcast(n_true))

@@ -43,6 +43,7 @@ from pyspark.sql.window import Window
 
 from ..functions.core import rebalance
 from ..functions.text import word_ngrams, word_tokens
+from ..operators.cache import persist
 from ..operators.hashing import h32
 from ..operators.prefix import with_global_running
 from ..sources.registry import load_table
@@ -321,21 +322,16 @@ def _knn_oracle() -> str:
 def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed kNN edge list (src, dst, rank, cosine) — shared by the
     graph report and the semantic-cluster composition. Persisted: the
-    mutuality check references it twice. Cache policy: harness-scoped
-    (bench.py clearCache()s per query) AND tracked — library callers
-    outside the harness release via operators.cache.release_tracked().
-    """
+    mutuality check references it twice."""
     from ..functions.vectors import vec_norm
-    from ..operators.cache import track
     from ..operators.similarity import hyperplane_bucket, _pair_cosine
     from .llm_ext import HYPERPLANES
 
     emb = rebalance(load_table(spark, sf_dir, "embeddings"))
-    e = track(emb.select("vec_id", "embedding",
-                         hyperplane_bucket(F.col("embedding"), HYPERPLANES)
-                         .alias("bucket"),
-                         vec_norm(F.col("embedding")).alias("_nrm"))
-              .persist())
+    e = persist(emb.select("vec_id", "embedding",
+                           hyperplane_bucket(F.col("embedding"), HYPERPLANES)
+                           .alias("bucket"),
+                           vec_norm(F.col("embedding")).alias("_nrm")))
     a = e.select(F.col("vec_id").alias("src"),
                  F.col("embedding").alias("_qv"),
                  F.col("bucket"), F.col("_nrm").alias("_qnrm"))
@@ -348,10 +344,9 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                      _pair_cosine("_qv", "_cv", "_qnrm", "_cnrm")
                      .alias("cosine")))
     w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
-    return track(sims.withColumn("rank", F.row_number().over(w))
-                     .filter(F.col("rank") <= _KNN_K)
-                     .select("src", "dst", "rank", "cosine")
-                     .persist())
+    return persist(sims.withColumn("rank", F.row_number().over(w))
+                       .filter(F.col("rank") <= _KNN_K)
+                       .select("src", "dst", "rank", "cosine"))
 
 
 @register(
@@ -460,16 +455,12 @@ def knn_graph_mutual_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import hyperplane_bucket, _pair_cosine
     from .llm_ext import HYPERPLANES
 
-    from ..operators.cache import track
     emb = rebalance(load_table(spark, sf_dir, "embeddings"))
-    # persisted (the pool and query sides both read it); released by
-    # the harness clearCache or a library caller's release_tracked()
-    # — unpersisting here would un-cache BEFORE the lazy result runs
-    e = track(emb.select("vec_id", "embedding",
-                         hyperplane_bucket(F.col("embedding"), HYPERPLANES)
-                         .alias("bucket"),
-                         vec_norm(F.col("embedding")).alias("_nrm"))
-              .persist())
+    # persisted: the pool and query sides both read it
+    e = persist(emb.select("vec_id", "embedding",
+                           hyperplane_bucket(F.col("embedding"), HYPERPLANES)
+                           .alias("bucket"),
+                           vec_norm(F.col("embedding")).alias("_nrm")))
     wpool = Window.partitionBy("bucket").orderBy(
         h32(F.concat(F.lit("knnpool|"), F.col("vec_id").cast("string"))),
         "vec_id")
@@ -492,10 +483,9 @@ def knn_graph_mutual_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table twice (forward + reversed), and without the pin each side
     # re-runs the N x cap scoring join over the cached e — the edge
     # table is <= k rows x 20 bytes per vector, the cheap thing to pin
-    edges = track(sims.withColumn("rank", F.row_number().over(w))
-                      .filter(F.col("rank") <= _KNN_K)
-                      .select("src", "dst", "rank", "cosine")
-                      .persist())
+    edges = persist(sims.withColumn("rank", F.row_number().over(w))
+                        .filter(F.col("rank") <= _KNN_K)
+                        .select("src", "dst", "rank", "cosine"))
     rev = edges.select(F.col("src").alias("_rsrc"),
                        F.col("dst").alias("_rdst"))
     out = edges.join(rev, (F.col("_rsrc") == F.col("dst"))
@@ -783,11 +773,9 @@ def nn_descent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the prefix-rank machinery (partitioned window + offsets fold
     # + broadcast join over with_global_running's cached range frame)
     # would execute once per side; the frame is 3 longs per vector.
-    # track()ed like _knn_edges for library-caller release.
-    from ..operators.cache import track
-    ranked = track(with_global_running(
+    ranked = persist(with_global_running(
         ids, [h32(F.col("vec_id").cast("string")), F.col("vec_id")],
-        rank="rnk", totals=True).persist())
+        rank="rnk", totals=True))
     a = ranked.select(F.col("vec_id").alias("src"),
                       F.col("rnk").alias("_ra"),
                       F.col("_n_total").alias("_n"))
@@ -803,7 +791,7 @@ def nn_descent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: the seed edge set feeds four subtrees (rev, both
     # 2-hop sides, and the candidate union) — without the pin the
     # ring's prefix-rank machinery re-executes per reference
-    edges = lsh.union(ring).persist()
+    edges = persist(lsh.union(ring))
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     k1 = edges.select(F.col("src"), F.col("dst").alias("_mid"))
     k2 = edges.select(F.col("src").alias("_mid"), F.col("dst"))
@@ -978,11 +966,11 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
                .select(F.col("vec_id").alias("_cid"),
                        F.col("embedding").alias("_cv"),
                        F.col("_nrm").alias("_cnrm")))
-    cur = (emb.crossJoin(F.broadcast(seed))
-              .select("vec_id", "embedding", "_nrm",
-                      (F.lit(1.0) - _pair_cosine("_cv", "embedding",
-                                                 "_cnrm", "_nrm"))
-                      .alias("dmin")).persist())
+    cur = persist(emb.crossJoin(F.broadcast(seed))
+                     .select("vec_id", "embedding", "_nrm",
+                             (F.lit(1.0) - _pair_cosine("_cv", "embedding",
+                                                        "_cnrm", "_nrm"))
+                             .alias("dmin")))
     picks = [seed.select(F.lit(0).alias("round"),
                          F.col("_cid").alias("vec_id"),
                          F.lit(None).cast("double").alias("radius"))]
@@ -995,13 +983,13 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         picks.append(sel.select(F.lit(k).alias("round"),
                                 F.col("_cid").alias("vec_id"),
                                 F.round("_r", 6).alias("radius")))
-        cur = (cur.crossJoin(F.broadcast(sel))
-                  .select("vec_id", "embedding", "_nrm",
-                          F.least(
-                              F.col("dmin"),
-                              F.lit(1.0) - _pair_cosine(
-                                  "_cv", "embedding", "_cnrm", "_nrm"))
-                          .alias("dmin")).persist())
+        cur = persist(cur.crossJoin(F.broadcast(sel))
+                         .select("vec_id", "embedding", "_nrm",
+                                 F.least(
+                                     F.col("dmin"),
+                                     F.lit(1.0) - _pair_cosine(
+                                         "_cv", "embedding", "_cnrm", "_nrm"))
+                                 .alias("dmin")))
     out = picks[0]
     for p in picks[1:]:
         out = out.unionByName(p)

@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 
 from ..functions.core import rebalance
 from ..functions.text import word_ngrams, word_tokens
-from ..operators.cache import track
+from ..operators.cache import persist
 from ..operators.hashing import FP_PRIME, P61, h32
 from ..sources.registry import load_table
 from . import register
@@ -263,22 +263,19 @@ def winnow_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it), the distinct (doc, hash) table feeds the verify side twice
     # (sizes + both intersection sides), and the fingerprint table the
     # df filter + both pair-join sides — one materialization of each
-    # serves all references (harness-scoped cache policy, same as
-    # _knn_edges). The selection itself runs once per row behind the
-    # explode Generate barrier. Outside the harness, release via
-    # operators.cache.release_tracked().
-    base = track(_winnow_base(spark, sf_dir).persist())
+    # serves all references. The selection itself runs once per row
+    # behind the explode Generate barrier.
+    base = persist(_winnow_base(spark, sf_dir))
     hs = F.col("hs")
-    dh = track(base.select("doc_id", F.explode("hs").alias("h"))
-                   .distinct().persist())
-    fps = track(base.select(
-                    "doc_id",
-                    F.explode(F.array_distinct(
-                        F.transform(_winnow_sel(hs),
-                                    lambda p: F.element_at(hs,
-                                                           p.cast("int")))))
-                    .alias("fp"))  # array_distinct => unique per doc
-                .persist())
+    dh = persist(base.select("doc_id", F.explode("hs").alias("h"))
+                     .distinct())
+    fps = persist(base.select(
+                      "doc_id",
+                      F.explode(F.array_distinct(
+                          F.transform(_winnow_sel(hs),
+                                      lambda p: F.element_at(hs,
+                                                             p.cast("int")))))
+                      .alias("fp")))  # array_distinct => unique per doc
     keep = (fps.groupBy("fp").agg(F.count("*").alias("df"))
                .filter((F.col("df") >= 2) & (F.col("df") <= _WP_MAX_DF))
                .select("fp"))
@@ -462,14 +459,12 @@ def bitext_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.col("bucket").alias("_cb"),
                   F.col("_nrm").alias("_cn")))
     # persist: fwd/bwd windows, both stat aggregates, and the
-    # mutual-best join all read the candidate table (harness-scoped
-    # cache policy, same as _knn_edges; tracked for library release)
-    cand = track(x.join(y, F.col("bucket") == F.col("_cb"))
-                  .select("src", "dst",
-                          F.floor(_pair_cosine("_qv", "_cv", "_qn", "_cn")
-                                  * 1000000 + F.lit(0.5)).cast("bigint")
-                          .alias("ci"))
-                  .persist())
+    # mutual-best join all read the candidate table
+    cand = persist(x.join(y, F.col("bucket") == F.col("_cb"))
+                    .select("src", "dst",
+                            F.floor(_pair_cosine("_qv", "_cv", "_qn", "_cn")
+                                    * 1000000 + F.lit(0.5)).cast("bigint")
+                            .alias("ci")))
     wf = Window.partitionBy("src").orderBy(F.desc("ci"), F.asc("dst"))
     wb = Window.partitionBy("dst").orderBy(F.desc("ci"), F.asc("src"))
     fwd = cand.withColumn("rf", F.row_number().over(wf))

@@ -56,6 +56,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.cache import persist
 from ..operators.hashing import h32
 from ..sources.registry import load_table
 from . import register
@@ -812,10 +813,8 @@ _BQ_PPM = 1_000_000
         "serves with.",
 )
 def blocking_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.cache import track
-    named = track(load_table(spark, sf_dir, "supplier")
-                  .groupBy("s_name").agg(F.count("*").alias("m"))
-                  .persist())
+    named = persist(load_table(spark, sf_dir, "supplier")
+                    .groupBy("s_name").agg(F.count("*").alias("m")))
     strat = (named.select(F.lit("first_char").alias("strategy"),
                           F.substring("s_name", 1, 1).alias("k"),
                           "s_name", "m")

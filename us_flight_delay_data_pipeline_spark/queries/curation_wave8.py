@@ -76,6 +76,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import word_tokens
+from ..operators.cache import persist
 from ..operators.prefix import with_global_running
 from ..sources.registry import load_table
 from . import register
@@ -129,7 +130,6 @@ _TOKS_SQL = ("CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[] "
         "window anywhere.",
 )
 def pareto_frontier_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.cache import track
     docs = load_table(spark, sf_dir, "documents")
     toks = word_tokens(F.lower(F.col("text")))
     pts = docs.select(
@@ -138,8 +138,8 @@ def pareto_frontier_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the distinct-point table feeds BOTH the per-x collapse
     # and the final frontier join — without it the tokenization scan
     # runs twice (point-count-sized, tiny vs the corpus)
-    cnts = track(pts.groupBy("n_tokens", "n_distinct")
-                    .agg(F.count("*").alias("n_docs")).persist())
+    cnts = persist(pts.groupBy("n_tokens", "n_distinct")
+                      .agg(F.count("*").alias("n_docs")))
     per_x = cnts.groupBy("n_tokens").agg(F.max("n_distinct").alias("nd"))
     # inclusive running MAX of nd over n_tokens DESC == -(running min
     # of -nd); the running max is monotone non-decreasing along the
@@ -212,14 +212,13 @@ def pareto_frontier_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "BIGINT — verified bit-identical between engines.",
 )
 def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.cache import track
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                       "l_partkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     # persist: basket-items feeds FIVE subtrees (pair join a+b, item
     # counts twice, basket total) — one scan+distinct instead of five
-    bi = track(li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-                 .select("l_orderkey", "p_brand").distinct().persist())
+    bi = persist(li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+                   .select("l_orderkey", "p_brand").distinct())
     nb = bi.agg(F.countDistinct("l_orderkey").alias("n_baskets"))
     ic = bi.groupBy("p_brand").agg(F.count("*").alias("n_item"))
     a = bi.alias("a")
@@ -426,7 +425,6 @@ def group_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (quantized data: bounded), the heavy passes become map-side-
     # combinable hash aggs, and raw rows never sort. Same shape as
     # equi_depth_binning's value-consistent quantiles.
-    from ..operators.cache import track
     # NULL values are excluded up front: Spark's histogram would
     # otherwise group NULL as a key (and a rank window orders nulls
     # first) while DuckDB's row_number orders nulls last — shifting
@@ -437,12 +435,12 @@ def group_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
          .where(F.col("value").isNotNull()))
     # persist: the quantized scan feeds the value histogram AND the
     # deviation histogram — one events scan total
-    v = track(e.select(
+    v = persist(e.select(
         "event_type",
         (F.col("value").cast("decimal(38,6)") * 1000000)
-        .cast("bigint").alias("v_us")).persist())
-    h1 = track(v.groupBy("event_type", "v_us")
-                .agg(F.count("*").alias("cnt")).persist())
+        .cast("bigint").alias("v_us")))
+    h1 = persist(v.groupBy("event_type", "v_us")
+                  .agg(F.count("*").alias("cnt")))
     n = h1.groupBy("event_type").agg(F.sum("cnt").cast("bigint").alias("n"))
     wv = (Window.partitionBy("event_type").orderBy("v_us")
                 .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -454,8 +452,8 @@ def group_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (v.join(F.broadcast(med), "event_type")
           .select("event_type", "med_us",
                   F.abs(F.col("v_us") - F.col("med_us")).alias("d_us")))
-    h2 = track(d.groupBy("event_type", "med_us", "d_us")
-                .agg(F.count("*").alias("cnt")).persist())
+    h2 = persist(d.groupBy("event_type", "med_us", "d_us")
+                  .agg(F.count("*").alias("cnt")))
     wd = (Window.partitionBy("event_type").orderBy("d_us")
                 .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     mad = (h2.withColumn("cum", F.sum("cnt").over(wd))
@@ -813,19 +811,17 @@ def source_ngram_overlap_matrix(spark: SparkSession,
                 .select("doc_id", "source",
                         F.explode(F.array_distinct(
                             word_ngrams(F.col("text"), 3))).alias("sgl")))
-    from ..operators.cache import track
     # persist: the hashed-shingle table is the tokenize/explode pass —
     # it feeds the df histogram AND the capped join; ss feeds the pair
     # join twice plus the per-source totals. Without the barriers the
     # corpus is re-shingled four times.
-    hh = track(base.select("doc_id", "source", h32(F.col("sgl")).alias("h"))
-                   .distinct().persist())
+    hh = persist(base.select("doc_id", "source", h32(F.col("sgl")).alias("h"))
+                     .distinct())
     rare = (hh.groupBy("h")
               .agg(F.countDistinct("doc_id").alias("df"))
               .where(F.col("df") <= _OVL_MAX_DF)
               .select("h"))
-    ss = track(hh.join(rare, "h").select("source", "h").distinct()
-                 .persist())
+    ss = persist(hh.join(rare, "h").select("source", "h").distinct())
     ns = ss.groupBy("source").agg(F.count("*").alias("n_sh"))
     a = ss.alias("a")
     b = ss.alias("b")

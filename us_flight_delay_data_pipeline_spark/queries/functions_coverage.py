@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.core import arr_str
+from ..operators.cache import persist
 from ..sources.registry import load_table
 from . import register
 from .relational import DEC, dsum, _osum
@@ -85,11 +86,11 @@ def envelope_silver_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filter (which references the parsed struct) down through the
     # rebalance exchange, dragging the whole encode->decode->from_json
     # chain into the single-task scan stage — measured 4x slower.
-    parsed = (bronze
-              .withColumn("body_str", decode_and_repair_body(F.col("body")))
-              .select(F.from_json("body_str", schema).alias("data"))
-              .select("data.*")
-              .persist())
+    parsed = persist(bronze
+                     .withColumn("body_str",
+                                 decode_and_repair_body(F.col("body")))
+                     .select(F.from_json("body_str", schema).alias("data"))
+                     .select("data.*"))
     silver = (parsed
               .na.drop(subset=["orderkey"])
               .withColumns({"orderkey": F.col("orderkey").try_cast("bigint"),

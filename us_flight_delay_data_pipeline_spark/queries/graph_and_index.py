@@ -25,6 +25,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.cache import persist
 from ..operators.graph import PR_QUANT, pagerank
 from ..sources.registry import load_table
 from . import register
@@ -106,10 +107,10 @@ def _pagerank_oracle() -> str:
 def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (o.join(li, o.o_orderkey == li.l_orderkey)
-              .select((2 * F.col("o_custkey")).alias("a"),
-                      (2 * F.col("l_suppkey") + 1).alias("b"))
-              .distinct().persist())
+    pairs = persist(o.join(li, o.o_orderkey == li.l_orderkey)
+                     .select((2 * F.col("o_custkey")).alias("a"),
+                             (2 * F.col("l_suppkey") + 1).alias("b"))
+                     .distinct())
     edges = (pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
                   .union(pairs.select(F.col("b").alias("src"),
                                       F.col("a").alias("dst"))))

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import word_ngrams, word_tokens
+from ..operators.cache import persist
 from ..sources.registry import load_table
 from . import register
 
@@ -1405,7 +1406,6 @@ def ann_beam_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one bounded driver pull: the entry node id (a scalar)
     entry = (e.filter(F.col("vec_id") >= _BEAM_NQ)
               .agg(F.min("vec_id")).first()[0])
-    from ..operators.cache import track
     w = Window.partitionBy("q_id").orderBy(F.desc("c"), F.asc("node"))
     beam = qs.select("q_id", F.lit(entry).cast("long").alias("node"))
     ranked = None
@@ -1415,9 +1415,8 @@ def ann_beam_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # h-1's whole subtree 2x — 2^hops total (the chained-lineage
         # iterative failure mode; same fix as copurchase_kcore). The
         # pinned frame is the (n_queries x beam_width) frontier —
-        # bytes, not data-scale; released by the harness clearCache
-        # or a library caller's release_tracked().
-        beam = track(beam.persist())
+        # bytes, not data-scale.
+        beam = persist(beam)
         cand = (beam.unionByName(
                     beam.join(edges, beam.node == edges.src)
                         .select("q_id", F.col("dst").alias("node")))

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.cache import checkpoint
 from ..sources.registry import load_table
 from . import register
 from .relational import DEC, _osum, dsum
@@ -583,14 +584,14 @@ def monthly_spine_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the checkpointed subtree is one row of four ints.
     ym = (F.year(F.col("o_orderdate").cast("date")) * 12
           + F.month(F.col("o_orderdate").cast("date")) - 1)
-    (o.agg(F.min(F.year(F.col("o_orderdate").cast("date")))
-            .cast("int").alias("lo_y"),
-           F.max(F.year(F.col("o_orderdate").cast("date")))
-            .cast("int").alias("hi_y"),
-           F.min(ym).cast("int").alias("lo"),
-           F.max(ym).cast("int").alias("hi"))
-       .localCheckpoint(eager=True)
-       .createOrReplaceTempView(bview))
+    bounds = checkpoint(
+        o.agg(F.min(F.year(F.col("o_orderdate").cast("date")))
+               .cast("int").alias("lo_y"),
+              F.max(F.year(F.col("o_orderdate").cast("date")))
+               .cast("int").alias("hi_y"),
+              F.min(ym).cast("int").alias("lo"),
+              F.max(ym).cast("int").alias("hi")))
+    bounds.createOrReplaceTempView(bview)
     try:
         return spark.sql(f"""
             WITH RECURSIVE bounds AS (SELECT * FROM {bview}),

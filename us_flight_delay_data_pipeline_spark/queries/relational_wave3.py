@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.cache import persist
 from ..sources.registry import load_table
 from . import register
 from .relational import (DEC, _osum, _osum_exact, dsum, dsum_exact,
@@ -107,12 +108,11 @@ def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     rev_expr = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(DEC)
-    rev = (li.join(o, li.l_orderkey == o.o_orderkey)
-             .join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-             .groupBy("n_name")
-             .agg(F.sum(rev_expr).alias("revenue_dec"))
-             .persist())
+    rev = persist(li.join(o, li.l_orderkey == o.o_orderkey)
+                    .join(c, o.o_custkey == c.c_custkey)
+                    .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+                    .groupBy("n_name")
+                    .agg(F.sum(rev_expr).alias("revenue_dec")))
     total = rev.agg(F.sum("revenue_dec").cast("double").alias("_total"))
     rev_d = F.col("revenue_dec").cast("double")
     share = rev_d / F.col("_total")

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.cache import persist
 from ..sources.registry import load_table
 from . import register
 from .relational import (DEC, _omicros, _osum, _osum_exact, dsum,
@@ -376,11 +377,10 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = (load_table(spark, sf_dir, "lineitem")
           .filter((F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
                   & (F.col("l_shipdate") < F.lit("1997-07-01").cast("timestamp"))))
-    rev = (li.groupBy("l_suppkey")
-             .agg(dsum_exact(
-                      (F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-                  .alias("total_revenue"))
-             .persist())
+    rev = persist(li.groupBy("l_suppkey")
+                    .agg(dsum_exact(F.col("l_extendedprice")
+                                    * (1 - F.col("l_discount")))
+                         .alias("total_revenue")))
     mx = rev.agg(F.max("total_revenue").alias("_mx"))
     best = (rev.crossJoin(F.broadcast(mx))
                .filter(F.col("total_revenue") == F.col("_mx")))

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import word_tokens
+from ..operators.cache import persist
 from ..sources.registry import load_table
 from . import register
 from .llm_ext import _cosine_sql, _tok_sql
@@ -161,7 +162,6 @@ def _dense_ctes(pool_k: int) -> str:
 def _bm25_ranked(spark: SparkSession, sf_dir: str, pool_k: int) -> DataFrame:
     """Spark twin of :func:`_bm25_ctes` — returns
     ``(q_id, doc_id, sparse_rank)`` with ``sparse_rank <= pool_k``."""
-    from ..operators.cache import track
     d = load_table(spark, sf_dir, "documents") \
         .filter(F.length(F.trim("text")) > 0)
     toks = d.select(
@@ -172,8 +172,8 @@ def _bm25_ranked(spark: SparkSession, sf_dir: str, pool_k: int) -> DataFrame:
     # tokenize+explode subtree re-runs per branch (5×). tf is the
     # narrow (doc_id, term, count) relation, far smaller than the
     # exploded tokens; the stats action below materializes it.
-    tf = track(toks.groupBy("doc_id", "term")
-                   .agg(F.count("*").alias("tf")).persist())
+    tf = persist(toks.groupBy("doc_id", "term")
+                     .agg(F.count("*").alias("tf")))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = dl.agg(F.count("*").alias("n"), F.sum("dl").alias("tot")).first()
     n_docs = int(stats["n"])
@@ -694,30 +694,30 @@ _CE_W_TERM = 10
         "plan shape.",
 )
 def cross_encoder_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.cache import track
-    pool = track(
+    pool = persist(
         _bm25_ranked(spark, sf_dir, _POOL_K).select("q_id", "doc_id")
         .unionByName(_dense_ranked(spark, sf_dir, _POOL_K)
                      .select("q_id", "doc_id"))
-        .distinct().persist())
+        .distinct())
     pool_docs = pool.select("doc_id").distinct()
     base = _tokenized_base(spark, sf_dir)
     # feature extraction touches ONLY query + candidate docs: the
     # semi-join prunes before tokenization explodes anything
-    rel = track(
+    rel = persist(
         base.join(F.broadcast(pool_docs), "doc_id", "left_semi")
             .unionByName(base.filter(F.col("doc_id") < _N_QUERY_DOCS))
-            .dropDuplicates(["doc_id"]).persist())
-    tf = track(rel.select("doc_id", F.explode("toks").alias("term"))
-                  .groupBy("doc_id", "term")
-                  .agg(F.count("*").alias("tf")).persist())
+            .dropDuplicates(["doc_id"]))
+    tf = persist(rel.select("doc_id", F.explode("toks").alias("term"))
+                    .groupBy("doc_id", "term")
+                    .agg(F.count("*").alias("tf")))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    bg = track(rel.filter(F.size("toks") >= 2)
-                  .select("doc_id", F.explode(F.expr(
-                      "transform(sequence(1, size(toks) - 1), "
-                      "i -> concat(toks[i-1], ' ', toks[i]))")).alias("bg"))
-                  .groupBy("doc_id", "bg")
-                  .agg(F.count("*").alias("btf")).persist())
+    bg = persist(rel.filter(F.size("toks") >= 2)
+                    .select("doc_id", F.explode(F.expr(
+                        "transform(sequence(1, size(toks) - 1), "
+                        "i -> concat(toks[i-1], ' ', toks[i]))"))
+                        .alias("bg"))
+                    .groupBy("doc_id", "bg")
+                    .agg(F.count("*").alias("btf")))
     qtf = (tf.filter(F.col("doc_id") < _N_QUERY_DOCS)
              .select(F.col("doc_id").alias("q_id"), "term",
                      F.col("tf").alias("qtf")))

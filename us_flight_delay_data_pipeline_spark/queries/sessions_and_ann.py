@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.cache import persist
 from ..sources.registry import load_table
 from . import register
 from .relational import dsum, _osum
@@ -213,8 +214,8 @@ def _ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
     from ..functions.vectors import vec_dot, vec_norm
-    cells = _ivf_assign(spark, sf_dir) \
-        .withColumn("nrm", vec_norm(F.col("embedding"))).persist()
+    cells = persist(_ivf_assign(spark, sf_dir)
+                    .withColumn("nrm", vec_norm(F.col("embedding"))))
     q = (cells.filter(F.col("vec_id") < 10)
               .select(F.col("vec_id").alias("q_id"),
                       F.col("embedding").alias("qv"),
@@ -300,8 +301,8 @@ def ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (e.filter(F.col("vec_id") < 10)
           .select(F.col("vec_id").alias("q_id"), "embedding"))
     truth = brute_force_topk(e, q, k=10).select("q_id", "neighbor_id")
-    scored = _ivf_scored(spark, sf_dir).select("vec_id", "c_id", "rn") \
-                                       .persist()
+    scored = persist(_ivf_scored(spark, sf_dir)
+                     .select("vec_id", "c_id", "rn"))
     cells = (scored.filter(F.col("rn") == 1)
                    .select(F.col("vec_id").alias("n_id"),
                            F.col("c_id").alias("n_cell")))
@@ -319,9 +320,6 @@ def ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     lvl = marked.select("probe_rank",
                         F.explode(F.sequence(F.lit(1), F.lit(16)))
                          .alias("nprobe"))
-    # lazy return; the persist on `scored` is harness-scoped (see
-    # semantic_dedup's note) — unpersisting a lazy builder's cache
-    # here would fire before execution
     return (lvl.groupBy("nprobe")
                .agg(F.count("*").cast("bigint").alias("n_true"),
                     F.sum(F.when(F.col("probe_rank") <= F.col("nprobe"), 1)
@@ -560,9 +558,8 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
                .withColumn("sim", cosine_similarity(F.col("embedding"),
                                                     F.col("cv"))))
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("c_id"))
-    assigned = (scored.withColumn("rn", F.row_number().over(w))
-                      .select("vec_id", "embedding", "c_id", "rn")
-                      .persist())
+    assigned = persist(scored.withColumn("rn", F.row_number().over(w))
+                             .select("vec_id", "embedding", "c_id", "rn"))
     cells = assigned.filter(F.col("rn") == 1) \
                     .select("vec_id", "embedding", "c_id")
     probes = (assigned.filter((F.col("vec_id") < 10) & (F.col("rn") <= 4))
@@ -1133,7 +1130,7 @@ def _ivfpq_adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     asymmetric PQ distance — shared by the plain top-k and the
     rerank composite."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cells = _ivf_assign(spark, sf_dir).select("vec_id", "c_id").persist()
+    cells = persist(_ivf_assign(spark, sf_dir).select("vec_id", "c_id"))
     # PQ codebook + per-vector codes over NORMALIZED vectors (same
     # construction as pq_encode; see _normed_vectors for why)
     normed = _normed_vectors(emb)
@@ -1374,8 +1371,8 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .withColumn("sim", vec_dot(F.col("ev"), F.col("cv"))
                              / (F.col("nrm") * F.col("cnrm"))))
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("c_id"))
-    assigned = scored.withColumn("rn", F.row_number().over(w)) \
-                     .select("vec_id", "ev", "cv", "c_id", "rn").persist()
+    assigned = persist(scored.withColumn("rn", F.row_number().over(w))
+                             .select("vec_id", "ev", "cv", "c_id", "rn"))
     # residuals of cell members (rn=1), over NORMALIZED vectors
     # (assignment above stays on raw vectors — cosine is scale-
     # invariant so the cells are identical; see _normed_vectors)
@@ -1645,9 +1642,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # precomputed per ROW so the quadratic scan pays one dot product
     # per pair instead of dot + two norms (sqrt(sa)*sqrt(sb) is the
     # same double product either way — bit-identical to the oracle)
-    cells = (_ivf_assign(spark, sf_dir)
-             .withColumn("nrm", vec_norm(F.col("embedding")))
-             .persist())
+    cells = persist(_ivf_assign(spark, sf_dir)
+                    .withColumn("nrm", vec_norm(F.col("embedding"))))
     # in-cell all-pairs via bucket fan-out: a plain self-join on c_id
     # caps parallelism at n_cells tasks and each cell's O(n^2) scan
     # serializes — CPU-quadratic skew AQE cannot split
@@ -1662,14 +1658,11 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_dropped"))
     sizes = cells.groupBy("c_id").agg(
         F.count("*").cast("bigint").alias("n_vectors"))
-    # NOTE on the persist above: the builder returns a LAZY frame, so
-    # unpersisting here would un-cache BEFORE execution, and eager
-    # materialization (localCheckpoint) would blind the plan audits
-    # (tests/test_plan_audit.py pins ROUNDROBIN + _bkt in THIS plan)
-    # and execute jobs at build time. The cache is scoped by the
-    # harness instead: bench.py clearCache()s after every query; the
-    # cached subtree is the (vec_id, cell, nrm) assignment — MBs, not
-    # data-scale.
+    # NOTE on the persist above: eager materialization (a checkpoint)
+    # would blind the plan audits (tests/test_plan_audit.py pins
+    # ROUNDROBIN + _bkt in THIS plan) and execute jobs at build time.
+    # The cached subtree is the (vec_id, cell, nrm) assignment — MBs,
+    # not data-scale.
     return (sizes.join(drops, "c_id", "left")
             .select(F.col("c_id").alias("cell"), "n_vectors",
                     F.coalesce("n_dropped", F.lit(0).cast("bigint"))
@@ -1782,15 +1775,10 @@ def _semdedup_capped_oracle() -> str:
 def semantic_dedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
     from ..functions.vectors import vec_dot, vec_norm
-    from ..operators.cache import track
     from ..operators.hashing import h32
     from ..operators.skew import all_pairs_within_block
-    # both persists are track()ed so a library caller's
-    # release_tracked() can free them (same contract as
-    # knn_graph_mutual_capped); the harness clearCache also works
-    cells = track(_ivf_assign(spark, sf_dir)
-                  .withColumn("nrm", vec_norm(F.col("embedding")))
-                  .persist())
+    cells = persist(_ivf_assign(spark, sf_dir)
+                    .withColumn("nrm", vec_norm(F.col("embedding"))))
     ks = cells.groupBy("c_id").agg(
         F.when(F.count("*") > _SEMDEDUP_CAP,
                F.ceil(F.count("*") / F.lit(float(_SEMDEDUP_CAP)))
@@ -1824,9 +1812,9 @@ def semantic_dedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole = (cells.join(ks, "c_id").filter(F.col("k2") == 0)
                   .select("c_id", "vec_id", "embedding", "nrm",
                           F.lit(-1).cast("bigint").alias("sub")))
-    leaves = track(subbed.unionByName(whole)
-                         .withColumn("leaf", F.concat_ws("|", "c_id", "sub"))
-                         .persist())
+    leaves = persist(subbed.unionByName(whole)
+                           .withColumn("leaf",
+                                       F.concat_ws("|", "c_id", "sub")))
     joined = all_pairs_within_block(leaves, "leaf", "vec_id")
     sim = (vec_dot(F.col("a.embedding"), F.col("b.embedding"))
            / (F.col("a.nrm") * F.col("b.nrm")))

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import STOPWORDS, word_ngrams, word_tokens
+from ..operators.cache import persist
 from ..sources.registry import load_table
 from . import register
 from .llm_ext import STOPWORDS_SQL, _h32_sql, _shingles_sql, _tok_sql
@@ -879,9 +880,8 @@ def _bpe_word_table(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select(F.explode(word_tokens(F.lower(F.col("text"))))
                       .alias("w"))
              .filter(F.length("w") > 0))
-    return (toks.groupBy("w")
-                .agg(F.count("*").cast("bigint").alias("cnt"))
-                .persist())
+    return persist(toks.groupBy("w")
+                       .agg(F.count("*").cast("bigint").alias("cnt")))
 
 
 def _bpe_sym0(words: DataFrame) -> DataFrame:
@@ -943,7 +943,6 @@ def _bpe_one_merge(sym: DataFrame) -> DataFrame:
         "applying it (monotonically decreasing).".format(k=_BPE_ITERS),
 )
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.cache import track
     words = _bpe_word_table(spark, sf_dir)
     sym = _bpe_sym0(words)
     out_rows = []
@@ -955,7 +954,7 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ~2x each (chained-lineage iterative failure mode, the
         # ann_beam_search_topk fix). The pinned frame is the
         # vocabulary-sized symbol table, not corpus data.
-        sym = track(_bpe_one_merge(sym).persist())
+        sym = persist(_bpe_one_merge(sym))
         stat = (sym.agg(
                     F.sum(F.col("cnt") * F.size(F.split("s", "%")))
                      .cast("bigint").alias("corpus_symbols_after"),
@@ -1035,18 +1034,16 @@ def bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.explode(word_tokens(F.lower(F.col("text"))))
                        .alias("w"))
               .filter(F.length("w") > 0))
-    dwords = (dtoks.groupBy("doc_id", "w")
-                   .agg(F.count("*").cast("bigint").alias("cnt"))
-                   .persist())
+    dwords = persist(dtoks.groupBy("doc_id", "w")
+                          .agg(F.count("*").cast("bigint").alias("cnt")))
     words = dwords.groupBy("w").agg(F.sum("cnt").cast("bigint")
                                      .alias("cnt"))
-    from ..operators.cache import track
     sym = _bpe_sym0(words)
     for _ in range(_BPE_ITERS):
         # pin per step — _bpe_one_merge reads its input twice (pair
         # count + argmax broadcast build); see bpe_merges
-        sym = track(_bpe_one_merge(sym)
-                    .drop("_pat", "_repl", "_merged", "_n").persist())
+        sym = persist(_bpe_one_merge(sym)
+                      .drop("_pat", "_repl", "_merged", "_n"))
     enc = sym.select("w", F.size(F.split("s", "%")).cast("bigint")
                           .alias("n_sym"))
     return (dwords.join(enc, "w")

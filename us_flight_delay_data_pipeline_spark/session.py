@@ -22,6 +22,8 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "stop_spark"]
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _default_parallelism() -> int:
     env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -67,6 +69,10 @@ def get_spark(app_name: str = "us-flight-delay-pipeline-spark",
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers (UDFs, the Python DataSource writer) unpickle
+        # functions that import this package: put its root on their
+        # path so a launch from any working directory resolves it.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

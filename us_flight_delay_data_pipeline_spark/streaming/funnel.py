@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.text import quality_score, word_ngrams, word_tokens
+from ..operators.cache import checkpoint, persist, release
 from ..operators.components import connected_components
 from ..operators.dedup import (build_jaccard_index,
                                dedup_against_jaccard_index,
@@ -131,102 +132,107 @@ def _run_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int, *,
     index_path = os.path.join(state_dir, "jaccard_index")
     bench_path = os.path.join(state_dir, "bench_shingles")
     bid = F.lit(batch_id).cast("bigint")
-    base = batch_df.select(*_DOC_COLS).persist()
+    base = persist(batch_df.select(*_DOC_COLS))
+    exact = intra_dupes = fuzzy = decontam = None
+    try:
 
-    quality = base.filter(quality_score(F.col("text")) >= QUALITY_MIN)
+        quality = base.filter(quality_score(F.col("text")) >= QUALITY_MIN)
 
-    # -- exact dedup: intra-batch (keep lowest doc_id per hash),
-    #    then against the persisted hash set — excluding any rows
-    #    this same batch persisted before a crash (replay safety)
-    hashed = quality.withColumn("h", F.md5(F.col("text").cast("binary")))
-    first = hashed.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
-    intra = hashed.join(first.select("doc_id"), "doc_id", "left_semi")
-    seen = _read_or_none(spark, seen_path)
-    if seen is not None and "batch_id" in seen.columns:
-        seen = seen.filter(F.col("batch_id") != batch_id)
-    if seen is not None:
-        exact = intra.join(seen.select("h"), "h", "left_anti")
-    else:
-        exact = intra
-    # localCheckpoint (eager) PINS the stage result before its
-    # inputs change: every state write below mutates files this
-    # plan reads, and a lazy re-evaluation after the write would
-    # see the batch's own hashes/signatures and drop everything
-    exact = exact.localCheckpoint()
-    (exact.select("h").withColumn("batch_id", bid)
-          .write.mode("overwrite").partitionBy("batch_id")
-          .parquet(seen_path))
+        # -- exact dedup: intra-batch (keep lowest doc_id per hash),
+        #    then against the persisted hash set — excluding any rows
+        #    this same batch persisted before a crash (replay safety)
+        hashed = quality.withColumn("h", F.md5(F.col("text").cast("binary")))
+        first = hashed.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
+        intra = hashed.join(first.select("doc_id"), "doc_id", "left_semi")
+        seen = _read_or_none(spark, seen_path)
+        if seen is not None and "batch_id" in seen.columns:
+            seen = seen.filter(F.col("batch_id") != batch_id)
+        if seen is not None:
+            exact = intra.join(seen.select("h"), "h", "left_anti")
+        else:
+            exact = intra
+        # localCheckpoint (eager) PINS the stage result before its
+        # inputs change: every state write below mutates files this
+        # plan reads, and a lazy re-evaluation after the write would
+        # see the batch's own hashes/signatures and drop everything
+        exact = checkpoint(exact)
+        (exact.select("h").withColumn("batch_id", bid)
+              .write.mode("overwrite").partitionBy("batch_id")
+              .parquet(seen_path))
 
-    # -- fuzzy dedup: exact index probe, then intra-batch components
-    idx = _read_or_none(spark, os.path.join(index_path, "sketch"))
-    if idx is not None:
-        dup_ids = (dedup_against_jaccard_index(
-            exact, index_path, block_col="lang", ngram=sig_ngram,
-            threshold=jaccard_threshold, exclude_batch_id=batch_id)
-            .select(F.col("new_id").alias("doc_id")).distinct())
-        novel = exact.join(dup_ids, "doc_id", "left_anti")
-    else:
-        novel = exact
-    pairs = ngram_jaccard_pairs(novel, block_col="lang",
-                                threshold=jaccard_threshold,
-                                ngram=sig_ngram) \
-        .select("doc_a", "doc_b")
-    intra_dupes = (connected_components(pairs, src="doc_a", dst="doc_b")
-                   .filter(F.col("node") != F.col("component"))
-                   .select(F.col("node").alias("doc_id")))
-    fuzzy = novel.join(intra_dupes, "doc_id", "left_anti") \
-                 .localCheckpoint()  # pin before the index write
-    # every exact-survivor enters the index — dropped docs too,
-    # so later chain members still match (see module doc)
-    build_jaccard_index(exact.select("doc_id", "lang", "text"),
-                        index_path, block_col="lang", ngram=sig_ngram,
-                        threshold=jaccard_threshold, batch_id=batch_id)
+        # -- fuzzy dedup: exact index probe, then intra-batch components
+        idx = _read_or_none(spark, os.path.join(index_path, "sketch"))
+        if idx is not None:
+            dup_ids = (dedup_against_jaccard_index(
+                exact, index_path, block_col="lang", ngram=sig_ngram,
+                threshold=jaccard_threshold, exclude_batch_id=batch_id)
+                .select(F.col("new_id").alias("doc_id")).distinct())
+            novel = exact.join(dup_ids, "doc_id", "left_anti")
+        else:
+            novel = exact
+        pairs = ngram_jaccard_pairs(novel, block_col="lang",
+                                    threshold=jaccard_threshold,
+                                    ngram=sig_ngram) \
+            .select("doc_a", "doc_b")
+        intra_dupes = (connected_components(pairs, src="doc_a", dst="doc_b")
+                       .filter(F.col("node") != F.col("component"))
+                       .select(F.col("node").alias("doc_id")))
+        # pin before the index write
+        fuzzy = checkpoint(novel.join(intra_dupes, "doc_id", "left_anti"))
+        # every exact-survivor enters the index — dropped docs too,
+        # so later chain members still match (see module doc)
+        build_jaccard_index(exact.select("doc_id", "lang", "text"),
+                            index_path, block_col="lang", ngram=sig_ngram,
+                            threshold=jaccard_threshold, batch_id=batch_id)
 
-    # -- decontamination
-    bench = _read_or_none(spark, bench_path)
-    train = fuzzy.filter(F.col("source") != "src0")
-    if bench is not None:
-        # no tokenizing pre-filter — short docs explode to zero rows
-        contaminated = (train
-                        .select("doc_id", F.explode(F.array_distinct(
-                            F.transform(word_ngrams(F.col("text"),
-                                                    DECON_NGRAM), h32)))
-                            .alias("h"))
-                        .join(F.broadcast(bench), "h")
-                        .select("doc_id").distinct())
-        decontam = train.join(contaminated, "doc_id", "left_anti") \
-                        .persist()
-    else:
-        decontam = train.persist()
+        # -- decontamination
+        bench = _read_or_none(spark, bench_path)
+        train = fuzzy.filter(F.col("source") != "src0")
+        if bench is not None:
+            # no tokenizing pre-filter — short docs explode to zero rows
+            contaminated = (train
+                            .select("doc_id", F.explode(F.array_distinct(
+                                F.transform(word_ngrams(F.col("text"),
+                                                        DECON_NGRAM), h32)))
+                                .alias("h"))
+                            .join(F.broadcast(bench), "h")
+                            .select("doc_id").distinct())
+            decontam = persist(train.join(contaminated, "doc_id",
+                                          "left_anti"))
+        else:
+            decontam = persist(train)
 
-    # -- deterministic sampling
-    rate = F.lit(_DEFAULT_RATE)
-    for lang, r in sorted(SAMPLE_RATES.items()):
-        rate = F.when(F.col("lang") == lang, r).otherwise(rate)
-    sampled = decontam.filter(
-        h32(F.col("doc_id").cast("string")) % 100 < rate)
+        # -- deterministic sampling
+        rate = F.lit(_DEFAULT_RATE)
+        for lang, r in sorted(SAMPLE_RATES.items()):
+            rate = F.when(F.col("lang") == lang, r).otherwise(rate)
+        sampled = decontam.filter(
+            h32(F.col("doc_id").cast("string")) % 100 < rate)
 
-    (sampled.select(*_DOC_COLS).withColumn("batch_id", bid)
-            .write.mode("overwrite").partitionBy("batch_id")
-            .parquet(out_path))
+        (sampled.select(*_DOC_COLS).withColumn("batch_id", bid)
+                .write.mode("overwrite").partitionBy("batch_id")
+                .parquet(out_path))
 
-    stats = [
-        _stage_stats(base, batch_id, 0, "base"),
-        _stage_stats(quality, batch_id, 1, "quality"),
-        _stage_stats(exact.select(*_DOC_COLS), batch_id, 2,
-                     "exact_dedup"),
-        _stage_stats(fuzzy.select(*_DOC_COLS), batch_id, 3,
-                     "fuzzy_dedup"),
-        _stage_stats(decontam.select(*_DOC_COLS), batch_id, 4,
-                     "decontam"),
-        _stage_stats(sampled.select(*_DOC_COLS), batch_id, 5, "sample"),
-    ]
-    out = stats[0]
-    for s in stats[1:]:
-        out = out.unionByName(s)
-    out.write.mode("overwrite").partitionBy("batch_id").parquet(stats_path)
-    for df in (base, decontam):
-        df.unpersist()
+        stats = [
+            _stage_stats(base, batch_id, 0, "base"),
+            _stage_stats(quality, batch_id, 1, "quality"),
+            _stage_stats(exact.select(*_DOC_COLS), batch_id, 2,
+                         "exact_dedup"),
+            _stage_stats(fuzzy.select(*_DOC_COLS), batch_id, 3,
+                         "fuzzy_dedup"),
+            _stage_stats(decontam.select(*_DOC_COLS), batch_id, 4,
+                         "decontam"),
+            _stage_stats(sampled.select(*_DOC_COLS), batch_id, 5, "sample"),
+        ]
+        out = stats[0]
+        for s in stats[1:]:
+            out = out.unionByName(s)
+        out.write.mode("overwrite").partitionBy("batch_id").parquet(stats_path)
+    finally:
+        # the batch's persists, pins and component labels; a failed
+        # batch must not leave them behind in a long-running stream
+        for df in (base, exact, intra_dupes, fuzzy, decontam):
+            release(df)
 
 
 def stream_pretrain_funnel(docs_stream: DataFrame, *, state_dir: str,

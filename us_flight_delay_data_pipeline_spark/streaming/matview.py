@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.cache import persist, release
+
 __all__ = ["stream_monthly_revenue_log", "read_rollup", "compact_rollup"]
 
 _KEYS = ("year", "month")
@@ -91,12 +93,12 @@ def compact_rollup(spark: SparkSession, log_path: str) -> None:
     Run offline, never concurrently with the stream."""
     folded = read_rollup(spark, log_path) \
         .withColumn("batch_id", F.lit(-1).cast("bigint"))
-    folded.persist().count()  # materialize BEFORE touching inputs
+    persist(folded).count()  # materialize BEFORE touching inputs
     paths = [p for p in os.listdir(log_path)
              if p.startswith("batch_id=")]
     tmp = log_path + "__compact"
     folded.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-    folded.unpersist()
+    release(folded)
     for p in paths:
         shutil.rmtree(f"{log_path}/{p}", ignore_errors=True)
     for p in os.listdir(tmp):
